@@ -85,26 +85,40 @@ object TextFunctions {
     */
   def lemmatize(tokens: Column): Column = {
     def lemma(t: Column): Column =
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(t, "(?<=[a-z]{2})ies$", "y"),
-          "sses$",
-          "ss"
-        ),
-        "([^su])s$",
-        "$1"
-      )
+      lemmaRules.foldLeft(t) { case (acc, (pat, repl)) => regexp_replace(acc, pat, repl) }
     filter(transform(tokens, lemma _), t => length(t) > 2)
   }
+
+  /** The lemmatizer's suffix rules, applied in order (Java regex, the
+    * same engine `regexp_replace` runs): ies → y, sses → ss, and a
+    * plural s dropped unless it follows s or u.
+    */
+  private val lemmaRules: Seq[(String, String)] = Seq(
+    "(?<=[a-z]{2})ies$" -> "y",
+    "sses$"             -> "ss",
+    "([^su])s$"         -> "$1"
+  )
+
+  /** [[lemmatize]]'s rules on one driver-side string. */
+  private def lemmaOf(word: String): String =
+    lemmaRules.foldLeft(word) { case (acc, (pat, repl)) => acc.replaceAll(pat, repl) }
 
   /** Sum of term weights over the DISTINCT tokens of each row's array —
     * faithful single-expression form of the reference's score_udf
     * (gold_article_scoring.py:92-144 scores vector_unique). For the
     * scalable relational form (explode + broadcast join) see
     * Queries.q15_term_score.
+    *
+    * `tokens` are [[lemmatize]]d, so the weight keys are put through
+    * the same rules: the reference's WordNet lemmatizer keeps
+    * `biogas`, the suffix rules make it `bioga`, and only a key in the
+    * tokens' normal form can match. Where two keys meet in one form,
+    * the key that already was in it keeps its weight.
     */
   def termScore(tokens: Column, weights: Map[String, Int]): Column = {
-    val entries = weights.toSeq.sortBy(_._1)
+    val entries = weights.toSeq
+      .sortBy { case (k, _) => (lemmaOf(k) == k, k) } // later entries win in toMap
+      .map { case (k, v) => lemmaOf(k) -> v }.toMap.toSeq.sortBy(_._1)
     val m = map(entries.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
     aggregate(
       array_distinct(tokens),

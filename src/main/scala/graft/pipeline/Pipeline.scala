@@ -18,7 +18,10 @@ final class Pipeline(
     scoreWeights: Map[String, Int] = graft.functions.TextFunctions.cleanTechTerms
 ) {
 
-  final case class RunReport(stages: Seq[(String, Either[String, Long])]) {
+  /** `stages`: each stage's rows written, or why it skipped; `stageMs`:
+    * each stage's wall time in milliseconds, skipped stages included.
+    */
+  final case class RunReport(stages: Seq[(String, Either[String, Long])], stageMs: Map[String, Long]) {
     def written(stage: String): Option[Long] =
       stages.collectFirst { case (`stage`, Right(n)) => n }
     def skipped: Seq[(String, String)] = stages.collect { case (s, Left(m)) => (s, m) }
@@ -45,7 +48,12 @@ final class Pipeline(
       "gold_words"     -> (() => Stages.goldWords(spark, wh)),
       "gold_scored"    -> (() => Stages.goldScored(spark, wh, scoreWeights))
     )
-    RunReport(stages.map { case (name, f) => name -> f() })
+    val timed = stages.map { case (name, f) =>
+      val t0 = System.nanoTime()
+      val r  = f()
+      (name, r, (System.nanoTime() - t0) / 1000000L)
+    }
+    RunReport(timed.map(t => t._1 -> t._2), timed.map(t => t._1 -> t._3).toMap)
   }
 
   /** Backfill a CLOSED date range [fromDate, toDate] (yyyyMMdd): one

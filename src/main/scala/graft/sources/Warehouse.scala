@@ -865,18 +865,42 @@ final class Warehouse(
     val rows = fs.listStatus(dir)
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
-      .flatMap { st =>
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-          .withConf(spark.sparkContext.hadoopConfiguration)
-          .build()
-        try {
-          Iterator.continually(reader.read()).takeWhile(_ != null)
-            .map(g => g.getLong(0, 0)).toArray
-        } finally reader.close()
-      }
+      .flatMap(st => readParquetRows(st)(_.getLong(0, 0)))
     require(rows.length == 1, s"$layer.$table is not a 1-row scalar table (${rows.length} rows)")
     rows.head
+  }
+
+  /** Read attempts of [[readParquetRows]], retries included (specs pin parse counts). */
+  private[sources] val parquetReads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Every row of one small parquet file, read DRIVER-SIDE (no Spark
+    * job), with a reader built from the listed status and the session's
+    * Hadoop conf — `ParquetReader.builder(path)` builds a fresh
+    * `Configuration` per file, 12–16 ms against ~2 ms. A file a
+    * concurrent writer has not closed yet fails to open: it is
+    * re-stat'ed and retried with backoff, then the failure is rethrown.
+    */
+  private[sources] def readParquetRows[T](st: org.apache.hadoop.fs.FileStatus)(
+      row: org.apache.parquet.example.data.Group => T): Seq[T] = {
+    def attempt(n: Int): Seq[T] =
+      try {
+        parquetReads.incrementAndGet()
+        val cur = if (n == 0) st else fs.getFileStatus(st.getPath)
+        val in  = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromStatus(cur, spark.sparkContext.hadoopConfiguration)
+        val reader = new org.apache.parquet.hadoop.ParquetReader.Builder[
+            org.apache.parquet.example.data.Group](in) {
+          override protected def getReadSupport() =
+            new org.apache.parquet.hadoop.example.GroupReadSupport()
+        }.build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map(row).toVector
+        finally reader.close()
+      } catch {
+        case scala.util.control.NonFatal(_) if n < 3 =>
+          Thread.sleep(50L << (n + 1))
+          attempt(n + 1)
+      }
+    attempt(0)
   }
 
   /** DESCRIBE DETAIL parity: one row of physical table facts —

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** History surfaces: the change feed (CDF) family, the ops ledger
   * (DESCRIBE HISTORY parity) with version arithmetic and checkpoints,
@@ -322,6 +323,7 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
       g.append("version", ver)
       writer.write(g)
     } finally writer.close()
+    ledgerIndex.put(file.getName, Map(s"$layer.$table" -> ver))
     // advance the under-lock cache to the committed version (max: an
     // explicit `version` may replay an already-logged commit)
     if (heldLocks.get().contains(s"$layer.$table"))
@@ -355,9 +357,10 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
 
   /** Latest ledger version for a table; -1 before its first op.
     * While this thread holds the table's writer lock the value is
-    * served from [[lockedVersionCache]] after one ledger scan (the
-    * ledger cannot move under our hold); unlocked callers always
-    * scan — another JVM may have committed since.
+    * served from [[lockedVersionCache]] after one lookup (the ledger
+    * cannot move under our hold; the cache saves the listing, which on
+    * an object store costs more than a parse); unlocked callers always
+    * list — another JVM may have committed since.
     */
   private[sources] def latestVersion(tableName: String): Long = {
     val locked = heldLocks.get().contains(tableName)
@@ -370,55 +373,42 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
     v
   }
 
+  /** Ledger index: ledger file name → max version per table in it.
+    * Ledger files are immutable and UUID-named, so a parsed file is
+    * never read again (Delta's snapshot update reads only new log
+    * entries). Filled on a lookup miss, and by [[logOp]] and
+    * [[checkpointLedger]] for the files they write.
+    */
+  private[sources] val ledgerIndex =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+
   /** Max ledger version for a table, read DRIVER-SIDE with parquet-java
-    * (like Delta reads its transaction log — no Spark job). Every DML
-    * op consults the version several times (crash repair, claim,
-    * feed bounds); as a Spark job each lookup paid ~200 ms of
-    * scheduler latency, which dominated multi-commit bodies (q83's
-    * merge+delete+refresh ran 5+ ledger jobs). The ledger is a
-    * directory of tiny 1-row files (plus older Spark-written
-    * multi-row generations) — a driver loop over footers is
-    * milliseconds, and reads the same rows [[history]] serves.
+    * (no Spark job). The ledger holds one 1-row file per commit (plus
+    * checkpoints and older multi-row generations), and the 64-commit
+    * checkpoint never fires in a daily run: parsing every file on every
+    * lookup cost O(commits) × 2–16 ms. So each call LISTS the directory
+    * (other JVMs' commits stay visible), parses only files missing from
+    * [[ledgerIndex]], and drops entries of files no longer listed; a
+    * warm lookup is one listing and zero parses. A file still being
+    * written is retried, then raised — never skipped (a missed version
+    * lets two writers claim one number) and never indexed.
     */
   private[sources] def ledgerMaxVersion(tableName: String): Long = {
     val dir = new Path(tablePath(ledgerLayer, ledgerTable))
-    if (!fs.exists(dir)) return -1L
-    var maxV = -1L
-    fs.listStatus(dir)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .foreach { st =>
-        // a CROSS-table writer may be mid-logOp on a freshly-listed
-        // file (footer not yet closed — the same tiny window the old
-        // Spark-job read had); retry briefly before surfacing, never
-        // skip — a silently-missed committed version would let two
-        // writers claim the same version number
-        var attempt = 0
-        var done    = false
-        while (!done) {
-          try {
-            val reader = org.apache.parquet.hadoop.ParquetReader
-              .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-              .withConf(spark.sparkContext.hadoopConfiguration)
-              .build()
-            try {
-              var g = reader.read()
-              while (g != null) {
-                if (g.getString("table_name", 0) == tableName) {
-                  val v = g.getLong("version", 0)
-                  if (v > maxV) maxV = v
-                }
-                g = reader.read()
-              }
-            } finally reader.close()
-            done = true
-          } catch {
-            case _: Throwable if attempt < 3 =>
-              attempt += 1; Thread.sleep(50L << attempt); ()
-          }
-        }
-      }
-    maxV
+    if (!fs.exists(dir)) { ledgerIndex.clear(); return -1L }
+    val listed = fs.listStatus(dir).filter(s => s.isFile &&
+      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+    ledgerIndex.keySet.retainAll(listed.map(_.getPath.getName).toSet.asJava)
+    listed.iterator.flatMap { st =>
+      val name = st.getPath.getName
+      Option(ledgerIndex.get(name)).getOrElse {
+        // parsed outside the map's locks; a racing duplicate parse is harmless
+        val versions = readParquetRows(st)(g => (g.getString("table_name", 0), g.getLong("version", 0)))
+          .groupMapReduce(_._1)(_._2)(math.max)
+        ledgerIndex.put(name, versions)
+        versions
+      }.get(tableName)
+    }.maxOption.getOrElse(-1L)
   }
 
   private[sources] def nextVersion(tableName: String): Long = latestVersion(tableName) + 1L
@@ -462,44 +452,23 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
       val files = fs.listStatus(dir).filter(s => s.isFile &&
         !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       if (files.length < math.max(2, minFiles)) return 0L
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Long, Long, Long, Long, Long, Long)]
-      val folded = scala.collection.mutable.ArrayBuffer.empty[Path]
-      files.foreach { st =>
-        var attempt = 0
-        var done    = false
-        while (!done && attempt <= 3) {
-          try {
-            val reader = org.apache.parquet.hadoop.ParquetReader
-              .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-              .withConf(spark.sparkContext.hadoopConfiguration)
-              .build()
-            try {
-              var g = reader.read()
-              while (g != null) {
-                val t   = g.getType
-                val op  = g.getString("operation", 0)
-                val del =
-                  if (t.containsField("num_deleted")) g.getLong("num_deleted", 0)
-                  else if (op == "DELETE") 1L
-                  else 0L
-                rows += ((g.getString("table_name", 0), op,
-                  g.getLong("num_inserted", 0), g.getLong("num_updated", 0), del,
-                  g.getLong("num_output_rows", 0), g.getLong("ts_millis", 0),
-                  g.getLong("version", 0)))
-                g = reader.read()
-              }
-              folded += st.getPath
-            } finally reader.close()
-            done = true
-          } catch {
-            case _: Throwable =>
-              attempt += 1
-              if (attempt <= 3) Thread.sleep(50L << attempt)
-              // else: leave the file for the next checkpoint
-          }
-        }
+      // a file that still fails after the retries is left for the next checkpoint
+      val read = files.flatMap { st =>
+        try Some(st.getPath -> readParquetRows(st) { g =>
+          val op  = g.getString("operation", 0)
+          val del =
+            if (g.getType.containsField("num_deleted")) g.getLong("num_deleted", 0)
+            else if (op == "DELETE") 1L
+            else 0L
+          (g.getString("table_name", 0), op,
+            g.getLong("num_inserted", 0), g.getLong("num_updated", 0), del,
+            g.getLong("num_output_rows", 0), g.getLong("ts_millis", 0),
+            g.getLong("version", 0))
+        })
+        catch { case scala.util.control.NonFatal(_) => None }
       }
+      val folded = read.map(_._1)
+      val rows   = read.flatMap(_._2)
       if (folded.length < 2) return 0L
       val out = new Path(dir, s"part-graft-ckpt-${java.util.UUID.randomUUID()}.snappy.parquet")
       val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -521,7 +490,8 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
         g.append("version", ver)
         writer.write(g)
       } finally writer.close()
-      folded.foreach(p => fs.delete(p, false))
+      ledgerIndex.put(out.getName, rows.groupMapReduce(_._1)(_._8)(math.max))
+      folded.foreach { p => fs.delete(p, false); ledgerIndex.remove(p.getName) }
       folded.length.toLong
     }
 

@@ -104,6 +104,16 @@ class PipelineSpec extends SparkSpec {
     assert(scored.filter(org.apache.spark.sql.functions.col("article_score") <= 0).count() == 0)
   }
 
+  test("run report times every stage; the stage times sum to no more than the run's wall time") {
+    val (pipe, _, _, _) = freshPipeline()
+    val t0     = System.nanoTime()
+    val report = pipe.run("20221220")
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    assert(report.stageMs.keySet == report.stages.map(_._1).toSet)
+    assert(report.stageMs.values.forall(_ >= 0), report.stageMs)
+    assert(report.stageMs.values.sum <= wallMs, s"${report.stageMs} over a ${wallMs} ms run")
+  }
+
   test("re-run is incremental and idempotent: MERGE dedups arxiv, anti-join guards NYT, strict > guards scholar") {
     val (pipe, wh, _, _) = freshPipeline()
     pipe.run("20221220")

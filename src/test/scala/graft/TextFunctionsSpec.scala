@@ -51,6 +51,17 @@ class TextFunctionsSpec extends SparkSpec {
     assert(TextFunctions.cleanTechTerms("technology") == 30)
   }
 
+  test("termScore meets lemmatized tokens: biogas scores 12, batteries scores battery's 1") {
+    def score(token: String): Any = evalOne(TextFunctions.termScore(
+      TextFunctions.lemmatize(array(lit(token))), TextFunctions.cleanTechTerms))
+    assert(score("biogas") == 12)
+    assert(score("batteries") == 1)
+    assert(score("battery") == 1)
+    // a key in normal form keeps its weight over a key that lemmatizes onto it
+    assert(evalOne(TextFunctions.termScore(TextFunctions.lemmatize(array(lit("batteries"))),
+      Map("batteries" -> 7, "battery" -> 1))) == 1)
+  }
+
   test("bpeTrain learns the hand-computed merges (Sennrich corpus), greedy and tie-broken") {
     import spark.implicits._
     import graft.operators.Bpe
