@@ -184,10 +184,10 @@ object QueriesDml {
   }
 
   /** The full clause surface on a HIVE-PARTITIONED target under the
-    * oracle gate ([[Warehouse.mergeClausesPartitioned]] — the
-    * partition-scoped slice machinery): same batch and clause list as
-    * q114/q116 with the partition column (o_orderpriority) riding
-    * along; the BY SOURCE clauses widen the slice to every partition,
+    * oracle gate ([[Warehouse.mergeClauses]] — the partition-scoped
+    * case of the one copy-on-write MERGE body): same batch and clause
+    * list as q114/q116 with the partition column (o_orderpriority)
+    * riding along; the BY SOURCE clauses widen the slice to every partition,
     * and matched deletes/updates/inserts land in their directories.
     * DuckDB recomputes the final state including the partition column.
     */

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** The full Delta MERGE clause surface, as data. Conditions and
   * assignment/value expressions reference the join sides through the
@@ -63,16 +65,18 @@ object MergeClause {
   *     key-null heuristics — so target rows whose key IS NULL survive a
   *     merge untouched (a null src key only pairs with a null tgt key
   *     via the null-safe join, and an unmatched tgt row is always kept).
-  *   - Multiple source rows matching the SAME target row raise at
-  *     execution time, mirroring Delta's "multiple source rows matched
-  *     and attempted to modify the same target row" error
-  *     (reference silver_arxiv.py:145-151 relies on it). Duplicate
-  *     source keys that match no target row are all inserted — exactly
-  *     what Delta's WHEN NOT MATCHED INSERT does.
+  *   - Several source rows matching the SAME target row raise at
+  *     execution time when a pair would modify that row, mirroring
+  *     Delta's "multiple source rows matched and attempted to modify the
+  *     same target row" error (reference silver_arxiv.py:145-151 relies
+  *     on it); duplicates that all lose the version rule keep the
+  *     target row once. Duplicate source keys that match no target row
+  *     are all inserted — exactly what Delta's WHEN NOT MATCHED INSERT
+  *     does.
   */
 object Upsert {
 
-  /** Row-level outcome column added by [[plan]]. */
+  /** Row-level outcome column added by [[planClauses]]. */
   val ActionCol = "merge_action"
 
   private val TgtMark = "__graft_tgt_present"
@@ -80,15 +84,12 @@ object Upsert {
   private val SrcKeyRows = "__graft_src_key_rows"
   private val SrcKeyRank = "__graft_src_key_rank"
 
-  /** Build the merged DataFrame. `tgt` and `src` must share a schema.
-    * Matched rows take the src version only when `src.versionCol >
-    * tgt.versionCol` (the reference's conditional-update predicate);
-    * unmatched src rows are inserts; unmatched tgt rows are kept.
-    * Adds [[ActionCol]] ∈ {update, insert, keep}.
-    *
-    * The per-key src row count comes from a window over the same keys
-    * the join shuffles on, so Catalyst reuses one Exchange — the
-    * duplicate-source guard costs a sort, not an extra shuffle.
+  /** The conditional upsert as a merge plan: [[planClauses]] over
+    * [[MergeClause.upsertShape]]. Matched rows take the src version
+    * only when `src.versionCol > tgt.versionCol` (the reference's
+    * conditional-update predicate); unmatched src rows are inserts;
+    * unmatched tgt rows are kept. [[ActionCol]] ∈ {update, insert,
+    * keep}.
     */
   def plan(
       tgt: DataFrame,
@@ -97,124 +98,18 @@ object Upsert {
       versionCol: String,
       insertOnlyCols: Set[String] = Set.empty
   ): DataFrame = {
-    require(tgt.columns.sameElements(src.columns), "tgt/src schemas must match")
-    val srcKeyWindow = Window.partitionBy(keys.map(col): _*)
-    val t = tgt.withColumn(TgtMark, lit(true)).alias("t")
-    val s = src
-      .withColumn(SrcMark, lit(true))
-      .withColumn(SrcKeyRows, count(lit(1)).over(srcKeyWindow))
-      .alias("s")
-    val joinCond   = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val tgtPresent = col(s"t.$TgtMark").isNotNull
-    val srcPresent = col(s"s.$SrcMark").isNotNull
-    val matched    = tgtPresent && srcPresent
-    val srcWins    = matched && (col(s"s.$versionCol") > col(s"t.$versionCol"))
-    val inserted   = srcPresent && !tgtPresent
-    val useSrc: Column = inserted || srcWins
-    val dupMatched = matched && col(s"s.$SrcKeyRows") > 1
-    val dupError = raise_error(
-      concat(
-        lit("MERGE failed: multiple source rows matched the target row for key ("),
-        concat_ws(",", keys.map(k => col(s"s.$k").cast("string")): _*),
-        lit(")")
-      )
-    )
-    // the guard is a FILTER, not a projected column: a Filter condition
-    // determines cardinality, so no consumer can prune it — a bare
-    // count() over the plan raises exactly like Delta does, where
-    // round 3's column-woven guard was silently skipped. The condition
-    // references both join sides, so it can't be pushed below the
-    // full-outer join either.
-    val dupGuard = when(dupMatched, dupError.cast("boolean")).otherwise(lit(true))
-    // insertOnlyCols (identity columns): inserts take the source's
-    // freshly-assigned value, but an UPDATE must keep the target's —
-    // GENERATED ALWAYS AS IDENTITY values are stable for a row's life.
-    // Case-insensitive, like every identity-column match in the engine.
-    val insertOnlyLower = insertOnlyCols.map(_.toLowerCase)
-    val merged = tgt.columns.map { c =>
-      if (insertOnlyLower.contains(c.toLowerCase))
-        when(inserted, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-      else when(useSrc, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-    }
-    val action = when(inserted, lit("insert"))
-      .when(srcWins, lit("update"))
-      .otherwise(lit("keep"))
-      .as(ActionCol)
-    t.join(s, joinCond, "full_outer").filter(dupGuard).select(merged :+ action: _*)
-  }
-
-  /** The merge-on-read change plan: the same full-outer classification
-    * and duplicate-source guard as [[plan]], but emitting ONLY the
-    * rows a MOR commit writes — for each insert/update the post-image
-    * values (src side; insert-only/identity columns keep the target's
-    * on updates), the matched target row's pre-image values (null for
-    * inserts, `__pre_`-prefixed) and its positional metadata columns
-    * (the tombstones). Kept rows and unmatched target rows never
-    * appear, so every downstream pass is O(delta).
-    */
-  def planMorChanges(
-      tgtWithMeta: DataFrame,
-      src: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      metaCols: Seq[String],
-      insertOnlyCols: Set[String] = Set.empty
-  ): DataFrame = {
-    val dataCols = src.columns.toSeq
-    require(tgtWithMeta.columns.toSeq == dataCols ++ metaCols,
-      "tgt must be the src schema plus the metadata columns")
-    val srcKeyWindow = Window.partitionBy(keys.map(col): _*)
-    val t = tgtWithMeta.withColumn(TgtMark, lit(true)).alias("t")
-    val s = src
-      .withColumn(SrcMark, lit(true))
-      .withColumn(SrcKeyRows, count(lit(1)).over(srcKeyWindow))
-      .alias("s")
-    val joinCond   = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
-    val tgtPresent = col(s"t.$TgtMark").isNotNull
-    val srcPresent = col(s"s.$SrcMark").isNotNull
-    val matched    = tgtPresent && srcPresent
-    val srcWins    = matched && (col(s"s.$versionCol") > col(s"t.$versionCol"))
-    val inserted   = srcPresent && !tgtPresent
-    val useSrc: Column = inserted || srcWins
-    val dupMatched = matched && col(s"s.$SrcKeyRows") > 1
-    val dupError = raise_error(
-      concat(
-        lit("MERGE failed: multiple source rows matched the target row for key ("),
-        concat_ws(",", keys.map(k => col(s"s.$k").cast("string")): _*),
-        lit(")")))
-    // guard FIRST inside one conjunction (left-to-right short-circuit):
-    // splitting it into its own Filter would let CombineFilters reorder
-    // it behind useSrc and skip raising on a kept duplicate
-    val dupGuard = when(dupMatched, dupError.cast("boolean")).otherwise(lit(true))
-    val insertOnlyLower = insertOnlyCols.map(_.toLowerCase)
-    val post = dataCols.map { c =>
-      if (insertOnlyLower.contains(c.toLowerCase))
-        when(inserted, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-      else col(s"s.$c").as(c)
-    }
-    val pre    = dataCols.map(c => col(s"t.$c").as(s"__pre_$c"))
-    val meta   = metaCols.map(c => col(s"t.$c").as(c))
-    val action = when(inserted, lit("insert")).otherwise(lit("update")).as(ActionCol)
-    t.join(s, joinCond, "full_outer")
-      .filter(dupGuard && useSrc)
-      .select(post ++ pre ++ meta :+ action: _*)
+    val (m, nm, bs) = MergeClause.upsertShape(versionCol)
+    planClauses(tgt, src, keys, m, nm, bs, insertOnlyCols)
   }
 
   /** Shared classification scaffolding for the clause planners: the
-    * aliased full-outer join, the realm predicates, the per-realm
-    * winning-clause indexes (first clause whose condition holds, -1 if
-    * none), the duplicate-source guard, and the per-column merged
-    * value. One `when` chain per column — everything stays inside
-    * whole-stage codegen, no UDFs, no per-clause passes.
+    * aliased full-outer join, the duplicate-source guard, the row
+    * action and the per-column merged value. One `when` chain per
+    * column — everything stays inside whole-stage codegen, no UDFs, no
+    * per-clause passes.
     */
   private final case class ClausePlan(
       joined: DataFrame,
-      isMatched: Column,
-      srcOnly: Column,
-      tgtOnly: Column,
-      mWin: Column,
-      iWin: Column,
-      bWin: Column,
       dupGuard: Column,
       action: Column,
       valueFor: String => Column
@@ -228,20 +123,31 @@ object Upsert {
       notMatched: Seq[MergeClause.NotMatched],
       bySource: Seq[MergeClause.BySource],
       insertOnlyCols: Set[String],
-      dataCols: Seq[String],
-      colType: String => org.apache.spark.sql.types.DataType
+      colType: String => DataType
   ): ClausePlan = {
-    val srcKeyWindow = Window.partitionBy(keys.map(col): _*)
-    val t = tgt.withColumn(TgtMark, lit(true)).alias("t")
+    // The join matches keys null-safely, but it joins on the pair
+    // (coalesce(k, default), isnull(k)) projected on both sides rather
+    // than on `k <=> k`: Catalyst rewrites `<=>` into exactly that pair
+    // inside the join, so a window partitioned on `k` would need its own
+    // Exchange. Partitioned on the projected pair, the duplicate-source
+    // window shares the join's source-side Exchange — one shuffle per
+    // side, the guard costs a sort.
+    val joinKeys = keys.zipWithIndex.flatMap { case (k, i) =>
+      Seq(s"__graft_jk$i" -> coalesce(col(k), GraftBridge.column(Literal.default(colType(k)))),
+        s"__graft_jn$i" -> col(k).isNull)
+    }
+    val srcKeyWindow = Window.partitionBy(joinKeys.map { case (n, _) => col(n) }: _*)
+    val t = tgt.withColumns(joinKeys.toMap).withColumn(TgtMark, lit(true)).alias("t")
     // SrcKeyRank picks one representative pair when duplicate matches
     // are legal (all pairs keep); the ordering is a constant because
     // the kept copy is the target pre-image, identical for every pair
     val s = src
+      .withColumns(joinKeys.toMap)
       .withColumn(SrcMark, lit(true))
       .withColumn(SrcKeyRows, count(lit(1)).over(srcKeyWindow))
       .withColumn(SrcKeyRank, row_number().over(srcKeyWindow.orderBy(lit(1))))
       .alias("s")
-    val joinCond   = keys.map(k => col(s"t.$k") <=> col(s"s.$k")).reduce(_ && _)
+    val joinCond   = joinKeys.map { case (n, _) => col(s"t.$n") === col(s"s.$n") }.reduce(_ && _)
     val tgtPresent = col(s"t.$TgtMark").isNotNull
     val srcPresent = col(s"s.$SrcMark").isNotNull
     val isMatched  = tgtPresent && srcPresent
@@ -285,6 +191,10 @@ object Upsert {
           .otherwise(mAction))
         .when(srcOnly, when(iWin >= 0, lit("insert")).otherwise(lit("drop")))
         .otherwise(bAction)
+    // insertOnlyCols (identity columns): inserts take the source's
+    // freshly-assigned value, but an UPDATE must keep the target's —
+    // GENERATED ALWAYS AS IDENTITY values are stable for a row's life.
+    // Case-insensitive, like every identity-column match in the engine.
     val insertOnlyLower = insertOnlyCols.map(_.toLowerCase)
     def valueFor(c: String): Column = {
       val tCol = col(s"t.$c"); val sCol = col(s"s.$c")
@@ -317,14 +227,13 @@ object Upsert {
       }
       when(isMatched, mVal).when(srcOnly, iVal).otherwise(bVal).as(c)
     }
-    ClausePlan(t.join(s, joinCond, "full_outer"), isMatched, srcOnly, tgtOnly,
-      mWin, iWin, bWin, dupGuard, action, valueFor)
+    ClausePlan(t.join(s, joinCond, "full_outer"), dupGuard, action, valueFor)
   }
 
   /** The full-clause MERGE plan (Delta's complete WHEN surface —
     * matched update/delete, conditional inserts, not-matched-by-source
     * update/delete) as one full-outer join + per-column CASE chains,
-    * the same single-shuffle shape as [[plan]]. Output: the data
+    * one shuffle per side. Output: the data
     * columns plus [[ActionCol]] ∈ {insert, update, delete, keep};
     * delete rows carry the target pre-image (the writer filters them
     * out of the new generation and feeds them to CDF); source-only
@@ -342,8 +251,13 @@ object Upsert {
     require(tgt.columns.sameElements(src.columns), "tgt/src schemas must match")
     val dataCols = tgt.columns.toSeq
     val cp = buildClausePlan(tgt, src, keys, matched, notMatched, bySource,
-      insertOnlyCols, dataCols, c => tgt.schema(c).dataType)
+      insertOnlyCols, c => tgt.schema(c).dataType)
     cp.joined
+      // the guard is a FILTER, not a projected column: a Filter condition
+      // determines cardinality, so no consumer can prune it — a bare
+      // count() over the plan raises exactly like Delta does. It
+      // references both join sides, so it can't be pushed below the
+      // full-outer join either.
       .filter(cp.dupGuard)
       .select(dataCols.map(cp.valueFor) :+ cp.action.as(ActionCol): _*)
       .filter(col(ActionCol) =!= "drop")
@@ -353,8 +267,8 @@ object Upsert {
     * commit writes — action ∈ {insert, update, delete} with post-image
     * values, `__pre_`-prefixed target pre-images (null for inserts),
     * and the target's positional metadata columns (the tombstones for
-    * updates AND deletes). Kept rows never appear: every downstream
-    * pass is O(delta), exactly like [[planMorChanges]].
+    * updates AND deletes). Kept rows never appear, so every
+    * downstream pass is O(delta).
     */
   def planMorChangesClauses(
       tgtWithMeta: DataFrame,
@@ -370,13 +284,14 @@ object Upsert {
     require(tgtWithMeta.columns.toSeq == dataCols ++ metaCols,
       "tgt must be the src schema plus the metadata columns")
     val cp = buildClausePlan(tgtWithMeta, src, keys, matched, notMatched, bySource,
-      insertOnlyCols, dataCols, c => src.schema(c).dataType)
+      insertOnlyCols, c => src.schema(c).dataType)
     val post   = dataCols.map(cp.valueFor)
     val pre    = dataCols.map(c => col(s"t.$c").as(s"__pre_$c"))
     val meta   = metaCols.map(c => col(s"t.$c").as(c))
     cp.joined
-      // guard first inside one conjunction (left-to-right short-circuit),
-      // same reasoning as [[planMorChanges]]
+      // guard FIRST inside one conjunction (left-to-right short-circuit):
+      // as its own Filter, CombineFilters could order it behind the
+      // action test and skip raising on a duplicate that is not emitted
       .filter(cp.dupGuard && cp.action.isin("insert", "update", "delete"))
       .select(post ++ pre ++ meta :+ cp.action.as(ActionCol): _*)
   }
@@ -394,6 +309,8 @@ object Upsert {
     */
   final case class MergeClauseMetrics(inserted: Long, updated: Long, deleted: Long, kept: Long) {
     def outputRows: Long = inserted + updated + kept
+    /** The upsert view: an upsert's clause set never deletes. */
+    def writeMetrics: WriteMetrics = WriteMetrics(inserted, updated, kept)
   }
 
   /** The merge plan (`merged`, with [[ActionCol]]) and its metrics.
@@ -418,8 +335,7 @@ object Upsert {
   /** Run the metrics pass and return the plan + metrics. The metrics
     * aggregation references ONLY [[ActionCol]], so Catalyst prunes the
     * join to keys + version + presence marks — a narrow O(table) pass,
-    * not a full-width materialization; the zero-change early exit in
-    * the warehouse then skips every later full-width pass entirely.
+    * not a full-width materialization.
     */
   def mergeWithMetrics(
       tgt: DataFrame,
@@ -429,18 +345,14 @@ object Upsert {
       insertOnlyCols: Set[String] = Set.empty
   ): MergeResult = {
     val merged = plan(tgt, src, keys, versionCol, insertOnlyCols)
-    val counts = merged
-      .groupBy(col(ActionCol))
-      .count()
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .toMap
-    val m = WriteMetrics(
-      counts.getOrElse("insert", 0L),
-      counts.getOrElse("update", 0L),
-      counts.getOrElse("keep", 0L)
-    )
-    MergeResult(merged, m)
+    MergeResult(merged, actionCounts(merged).writeMetrics)
+  }
+
+  /** Per-action row counts of a merge plan, in one narrow aggregation. */
+  private[graft] def actionCounts(merged: DataFrame): MergeClauseMetrics = {
+    val n = merged.groupBy(col(ActionCol)).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    MergeClauseMetrics(n("insert"), n("update"), n("delete"), n("keep"))
   }
 
   /** SCD Type-2 merge — the dimension-history half of warehouse MERGE
@@ -457,10 +369,9 @@ object Upsert {
     *  - source key absent from target       → new OPEN version
     *  - historical rows (is_current = 0)    → never touched
     *
-    * One full-outer join on the keys + unions — the same single-
-    * shuffle shape as [[plan]]; nothing iterates per key. Null-safe
-    * attr comparison (`<=>`) so NULL → value and value → NULL both
-    * count as changes.
+    * One full-outer join on the keys + unions; nothing iterates per
+    * key. Null-safe attr comparison (`<=>`) so NULL → value and value
+    * → NULL both count as changes.
     *
     * The change batch is reduced to ONE row per key before the join —
     * the latest by `effCol` (attr values break ties deterministically).

@@ -1,17 +1,18 @@
 package graft.sources
 
-import graft.operators.Upsert
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.operators.{MergeClause, Upsert}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Copy-on-write DML: CTAS (whole-table and partitioned), DELETE /
-  * UPDATE / MERGE in both whole-table and partition-scoped forms, the
-  * full-clause MERGE paths, APPEND and the versioned UPSERT. Split
-  * from Warehouse.scala for reviewability — no behavior change; the
-  * members self-type on [[Warehouse]] and share its package-private
-  * core (locks, staged swap, ledger).
+/** Copy-on-write DML: CTAS (whole-table and partitioned), DELETE and
+  * UPDATE in whole-table and partition-scoped forms, APPEND, and MERGE
+  * — the shared MERGE front end, the one copy-on-write MERGE body
+  * behind [[upsert]] and [[mergeClauses]], and the change-feed writer
+  * every DML body commits through. The members self-type on
+  * [[Warehouse]] and share its package-private core (locks, staged
+  * swap, ledger).
   */
 private[sources] trait WarehouseDml { self: Warehouse =>
 
@@ -81,15 +82,8 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     val keptCarried =
       if (carryPairs.isEmpty) 0L
       else footerRowCount(carryPairs.map(_._1), Some(target))
-    val obs = org.apache.spark.sql.Observation()
-    touchedDf.filter(hit)
-      .withColumn("_change_type", lit("delete"))
-      .withColumn("_commit_version", lit(ver))
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(target + ".__changes")
-    val deleted = obs.get("n").asInstanceOf[Long]
+    val deleted =
+      appendFeed(layer, table, ver, touchedDf.filter(hit).withColumn("_change_type", lit("delete")))
     swapPartitions(layer, table, staging, retireDirs, pcols.length)
     logOp(layer, table, "DELETE", inserted = 0, updated = 0,
       outputRows = keptRewritten + keptCarried, version = ver, deleted = deleted)
@@ -161,335 +155,13 @@ private[sources] trait WarehouseDml { self: Warehouse =>
         }
       }: _*)
       .withColumn("_change_type", lit("update_postimage"))
-    val obs = org.apache.spark.sql.Observation()
-    pre.unionByName(post)
-      .withColumn("_commit_version", lit(ver))
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(target + ".__changes")
-    val updated = obs.get("n").asInstanceOf[Long] / 2
+    val updated = appendFeed(layer, table, ver, pre.unionByName(post)) / 2
     swapPartitions(layer, table, staging, retireDirs, pcols.length)
     logOp(layer, table, "UPDATE", inserted = 0, updated = updated,
       outputRows = rewrittenRows + carriedRows, version = ver)
     primeFeedSchemaCache(layer, table, df.schema)
     updated
   }
-
-  /** Partition-scoped MERGE. Touched = the source rows' partitions (the
-    * insert/update destinations) ∪ the partitions of target rows whose
-    * keys the source carries (the matched rows' CURRENT homes) — so a
-    * source row that changes a matched row's partition value rewrites
-    * BOTH directories and the row moves without duplication. The merge
-    * itself runs only over the touched slice.
-    */
-  private[sources] def upsertPartitioned(
-      layer: String,
-      table: String,
-      src: DataFrame,
-      keys: Seq[String],
-      versionCol: String,
-      pcols: Seq[String]
-  ): Upsert.WriteMetrics = {
-    require(
-      pcols.forall(src.columns.contains),
-      s"partitioned MERGE source must carry the partition columns (${pcols.mkString(",")})")
-    val tgt0       = this.table(layer, table)
-    val unioned    = unionSchema(tgt0.schema, src.schema)
-    val srcAligned = alignTo(src, unioned)
-    val srcParts   = touchedPartitions(srcAligned, pcols)
-    val srcKeys    = srcAligned.select(keys.map(col): _*).distinct()
-    // ONE semi-join pass yields both the matched partitions (the
-    // matched rows' current homes) and the matched FILES (the COW
-    // rewrite set) — `input_file_name()` rides along the same scan, so
-    // file-granular COW costs no extra pass over the pre-COW plan.
-    // Partition-pruned probe (the Delta idiom "put the partition column
-    // in the ON clause"): when the merge keys CONTAIN every partition
-    // column, a matched row agrees with its source row on those columns
-    // and so must already live in one of the source's partitions — the
-    // probe scans only that slice (PartitionFilters, zero I/O outside
-    // the touched directories) and the whole merge is O(touched
-    // partitions) even on a table 1000× the batch. A key-only merge
-    // keeps the full-table probe: a matched key may live in — and move
-    // from — any partition (the q96 cross-partition-move semantics),
-    // and only the probe can find its current home.
-    val probeTgt =
-      if (pcols.forall(keys.contains) && srcParts.nonEmpty)
-        pruneToTouched(tgt0, srcParts, pcols)
-      else tgt0
-    val tgtF = probeTgt.withColumn("__graft_file", input_file_name())
-    val matchedRows = tgtF
-      .join(srcKeys, keys.map(k => tgtF(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
-      .select((pcols.map(c => col(c).cast("string")) :+ col("__graft_file")): _*)
-      .distinct().collect()
-    val matchedParts: Seq[Seq[String]] =
-      matchedRows.map(r => pcols.indices.map(r.getString).toSeq).toSeq.distinct
-    val matchedKeyFiles: Set[String] =
-      matchedRows.map(r => normDataFile(r.getString(pcols.length))).toSet
-    val touched = (srcParts ++ matchedParts).distinct
-    if (touched.isEmpty) {
-      // touched empty ⟺ the source has zero rows. Documented divergence:
-      // a ZERO-ROW source carrying a new column does not evolve the
-      // schema here (Delta would update metadata); with no rows there is
-      // no partition slice to rewrite the column into, and rewriting the
-      // whole table for an empty source is the wrong trade at scale.
-      // Any nonzero-row source with a new column DOES evolve (below).
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      return Upsert.WriteMetrics(inserted = 0, updated = 0, kept = 0)
-    }
-    val sliceTgt = pruneToTouched(tgt0, touched, pcols)
-    // File-granular COW within the touched slice (see the unpartitioned
-    // path): only slice files holding a source key enter the merge —
-    // a matched row that MOVES partition is in such a file, so both its
-    // old home (rewritten without it) and its new home (insert into the
-    // staged dir) commit correctly. The rest of the touched dirs
-    // byte-copy. A source-only NEW column forces a full slice rewrite.
-    val newCols    = unioned.fieldNames.filterNot(tgt0.columns.contains)
-    val retireDirs = retireDirsFor(new Path(tablePath(layer, table)), pcols, tgt0.schema, touched)
-    val sliceFilePairs = dataFilesUnder(new Path(tablePath(layer, table)), retireDirs)
-    val matchedFiles: Set[String] =
-      if (newCols.nonEmpty) sliceFilePairs.map(_._1).toSet
-      else matchedKeyFiles
-    val carryPairs = sliceFilePairs.filterNot(p => matchedFiles.contains(p._1))
-    val touchedTgt =
-      if (matchedFiles.isEmpty) sliceTgt.limit(0)
-      else readFilesAligned(matchedFiles.toSeq, tgt0.schema,
-        basePath = Some(tablePath(layer, table)))
-    val mr = Upsert.mergeWithMetrics(alignTo(touchedTgt, unioned), srcAligned, keys, versionCol,
-      insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
-    val m  = mr.metrics
-    // zero-change early exit (the unified no-op convention, same as the
-    // unpartitioned path): the metrics pass is a narrow column-pruned
-    // aggregation, so a re-run where every source row loses the version
-    // rule is detected cheaply — skip the touched-slice rewrite, the empty
-    // feed partition, and the swap entirely; every partition file stays
-    // byte-identical. Still log a MERGE 0/0 commit with a version bump
-    // (Delta records a MERGE commit even at zero changed rows; the
-    // reference reads DESCRIBE HISTORY after every run).
-    // (the newCols probe above also forces the slice rewrite on a
-    // zero-change merge with a source-only column — mergeSchema on
-    // table() then surfaces the evolved column table-wide)
-    if (m.inserted == 0 && m.updated == 0 && newCols.isEmpty) {
-      mr.unpersist()
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      return m
-    }
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
-    // footer-only count BEFORE the feed write (minimal commit window —
-    // see WarehouseStreams.mvRefreshSink)
-    val carried =
-      if (carryPairs.isEmpty) 0L
-      else footerRowCount(carryPairs.map(_._1), Some(tablePath(layer, table)))
-    try {
-      // ONE full-width execution of the merge plan (r19, see
-      // [[Warehouse.stageByAction]]): the action rides as the innermost
-      // staging directory under the partition dirs, so the staged files
-      // are the slice's next generation unchanged and the feed's
-      // post-images read back as O(changes) staged bytes (basePath
-      // re-surfaces the partition columns) instead of re-running the
-      // slice join full-width a third time.
-      val byAction = stageByAction(
-        clusterStaged(mr.merged, pcols, touched.length), staging, Upsert.ActionCol, pcols)
-      copyFilesInto(carryPairs, staging)
-      def staged(action: String): Option[DataFrame] =
-        byAction.get(action).filter(_.nonEmpty)
-          .map(fls => readFilesAligned(fls, unioned, basePath = Some(staging.toString)))
-      val post = Seq(
-        staged("insert").map(_.withColumn("_change_type", lit("insert"))),
-        staged("update").map(_.withColumn("_change_type", lit("update_postimage")))).flatten
-      val pre = staged("update").map { u =>
-        val updatedKeys = u.select(keys.map(col): _*)
-        touchedTgt
-          .join(updatedKeys,
-            keys.map(k => touchedTgt(k) <=> updatedKeys(k)).reduce(_ && _), "left_semi")
-          .select(unioned.fieldNames.map(n =>
-            if (tgt0.columns.contains(n)) col(n)
-            else lit(null).cast(unioned(n).dataType).as(n)): _*)
-          .withColumn("_change_type", lit("update_preimage"))
-      }
-      (post ++ pre).reduceOption(_ unionByName _).foreach {
-        _.withColumn("_commit_version", lit(ver))
-          .withColumn("_commit_part", lit(f"$ver%010d"))
-          .write.mode(SaveMode.Append).partitionBy("_commit_part")
-          .parquet(tablePath(layer, table) + ".__changes")
-      }
-      promoteStagedActions(staging, pcols, Set("keep", "insert", "update"))
-    } finally mr.unpersist()
-    // retire = live dirs matching the touched tuples; the staged dirs
-    // (what the merge actually wrote) are listed inside the swap itself
-    swapPartitions(layer, table, staging, retireDirs, pcols.length)
-    logOp(layer, table, "MERGE", m.inserted, m.updated,
-      outputRows = m.outputRows + carried, version = ver)
-    primeFeedSchemaCache(layer, table, unioned)
-    m
-  }
-
-  /** Partition-scoped full-clause MERGE (the [[upsertPartitioned]]
-    * machinery for [[mergeClauses]]): touched partitions = source
-    * rows' partitions ∪ matched target rows' current homes, so matched
-    * UPDATEs/DELETEs rewrite only their slice and partition moves
-    * commit in both homes. A BY SOURCE clause can modify any target
-    * row, so its presence widens the slice to every partition — the
-    * same all-files rule as the flat layout, expressed as dirs.
-    * Delete-action rows leave the slice rewrite and land in the feed
-    * as `delete` pre-images.
-    */
-  private[sources] def mergeClausesPartitioned(
-      layer: String,
-      table: String,
-      src: DataFrame,
-      keys: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource],
-      pcols: Seq[String]
-  ): Upsert.MergeClauseMetrics = {
-    require(
-      pcols.forall(src.columns.contains),
-      s"partitioned MERGE source must carry the partition columns (${pcols.mkString(",")})")
-    val tgt0       = this.table(layer, table)
-    val unioned    = unionSchema(tgt0.schema, src.schema)
-    validateClauseAssignments(layer, table, unioned.fieldNames.toSeq,
-      matched, notMatched, bySource)
-    val srcAligned = alignTo(src, unioned)
-    val srcParts   = touchedPartitions(srcAligned, pcols)
-    // The matched-homes/matched-files probe, with two scan-avoidance
-    // rules the flat layout can't have:
-    //   - BY SOURCE present: the slice is every partition and every
-    //     slice file rewrites regardless, so the probe's outputs are
-    //     never consulted — skip the scan entirely.
-    //   - merge keys ⊇ partition columns (the Delta "partition column
-    //     in the ON clause" idiom): a matched row must already live in
-    //     a source partition, so the probe scans only that slice
-    //     (PartitionFilters — zero I/O outside the touched dirs).
-    // Otherwise the probe must scan the whole table: a matched key may
-    // live in, and move from, any partition.
-    val matchedRows =
-      if (bySource.nonEmpty) Array.empty[org.apache.spark.sql.Row]
-      else {
-        val probeTgt =
-          if (pcols.forall(keys.contains) && srcParts.nonEmpty)
-            pruneToTouched(tgt0, srcParts, pcols)
-          else tgt0
-        val tgtF = probeTgt.withColumn("__graft_file", input_file_name())
-        val srcKeys = srcAligned.select(keys.map(col): _*).distinct()
-        tgtF
-          .join(srcKeys, keys.map(k => tgtF(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
-          .select((pcols.map(c => col(c).cast("string")) :+ col("__graft_file")): _*)
-          .distinct().collect()
-      }
-    val matchedParts: Seq[Seq[String]] =
-      matchedRows.map(r => pcols.indices.map(r.getString).toSeq).toSeq.distinct
-    val matchedKeyFiles: Set[String] =
-      matchedRows.map(r => normDataFile(r.getString(pcols.length))).toSet
-    val touched: Seq[Seq[String]] =
-      if (bySource.nonEmpty) touchedPartitions(tgt0, pcols)
-      else (srcParts ++ matchedParts).distinct
-    if (touched.isEmpty) {
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      return Upsert.MergeClauseMetrics(0, 0, 0, 0)
-    }
-    val newCols    = unioned.fieldNames.filterNot(tgt0.columns.contains)
-    val retireDirs = retireDirsFor(new Path(tablePath(layer, table)), pcols, tgt0.schema, touched)
-    val sliceFilePairs = dataFilesUnder(new Path(tablePath(layer, table)), retireDirs)
-    val matchedFiles: Set[String] =
-      if (newCols.nonEmpty || bySource.nonEmpty) sliceFilePairs.map(_._1).toSet
-      else matchedKeyFiles
-    val carryPairs = sliceFilePairs.filterNot(p => matchedFiles.contains(p._1))
-    val sliceTgt   = pruneToTouched(tgt0, touched, pcols)
-    val touchedTgt =
-      if (matchedFiles.isEmpty) sliceTgt.limit(0)
-      else readFilesAligned(matchedFiles.toSeq, tgt0.schema,
-        basePath = Some(tablePath(layer, table)))
-    val idCols = identityColumns(layer, table).map(_._1).toSet
-    val merged = Upsert.planClauses(alignTo(touchedTgt, unioned), srcAligned,
-      keys, matched, notMatched, bySource, insertOnlyCols = idCols)
-    // Action counts AND the output rows' partition tuples in one job: a
-    // clause expression may ASSIGN a partition column (UPDATE SET pcol=…,
-    // INSERT (…, pcol) VALUES(…, expr)), landing rows in a partition
-    // outside `touched`. Such a partition must join the slice BEFORE
-    // retireDirs/carry are fixed, or the swap would replace its live
-    // directory with only the merged rows (silent data loss).
-    val actionParts = merged
-      .groupBy((col(Upsert.ActionCol) +: pcols.map(c => col(c).cast("string"))): _*)
-      .count().collect()
-    val counts = actionParts
-      .groupBy(_.getString(0)).map { case (a, rs) => a -> rs.map(_.getLong(pcols.length + 1)).sum }
-    val ins = counts.getOrElse("insert", 0L)
-    val upd = counts.getOrElse("update", 0L)
-    val del = counts.getOrElse("delete", 0L)
-    val keptPlan = counts.getOrElse("keep", 0L)
-    if (ins == 0 && upd == 0 && del == 0 && newCols.isEmpty) {
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      val carried0 =
-        if (carryPairs.isEmpty) 0L
-        else footerRowCount(carryPairs.map(_._1), Some(tablePath(layer, table)))
-      return Upsert.MergeClauseMetrics(0, 0, 0, keptPlan + carried0)
-    }
-    // Widen the slice with any partition the merged OUTPUT lands in that
-    // the source/matched-homes scan missed (partition-column assignment).
-    // Those partitions' target rows can never be key-matched (all matched
-    // homes are already in `touched`), so the plan above is unaffected —
-    // their live files simply byte-carry into the staging tree.
-    val outParts: Seq[Seq[String]] = actionParts.toSeq
-      .filter(r => r.getString(0) == "insert" || r.getString(0) == "update")
-      .map(r => pcols.indices.map(i => r.getString(i + 1)).toSeq)
-      .distinct
-    val touchedAll = (touched ++ outParts).distinct
-    val (retireAll, carryAll) =
-      if (touchedAll.lengthCompare(touched.length) == 0) (retireDirs, carryPairs)
-      else {
-        val rd = retireDirsFor(new Path(tablePath(layer, table)), pcols, tgt0.schema, touchedAll)
-        (rd, dataFilesUnder(new Path(tablePath(layer, table)), rd)
-          .filterNot(p => matchedFiles.contains(p._1)))
-      }
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
-    val carried =
-      if (carryAll.isEmpty) 0L
-      else footerRowCount(carryAll.map(_._1), Some(tablePath(layer, table)))
-    // ONE full-width execution of the clause plan (r19, see
-    // [[Warehouse.stageByAction]]): delete-action rows land in their
-    // own innermost staged directory — they carry the target pre-image
-    // values, so the feed's delete rows read off the staged bytes too,
-    // and the directory is dropped before the swap (never promoted).
-    val byAction = stageByAction(
-      clusterStaged(merged, pcols, touchedAll.length), staging, Upsert.ActionCol, pcols)
-    copyFilesInto(carryAll, staging)
-    def staged(action: String): Option[DataFrame] =
-      byAction.get(action).filter(_.nonEmpty)
-        .map(fls => readFilesAligned(fls, unioned, basePath = Some(staging.toString)))
-    val post = Seq(
-      staged("insert").map(_.withColumn("_change_type", lit("insert"))),
-      staged("update").map(_.withColumn("_change_type", lit("update_postimage")))).flatten
-    val pre = staged("update").map { u =>
-      val updatedKeys = u.select(keys.map(col): _*)
-      touchedTgt
-        .join(updatedKeys,
-          keys.map(k => touchedTgt(k) <=> updatedKeys(k)).reduce(_ && _), "left_semi")
-        .select(unioned.fieldNames.map(n =>
-          if (tgt0.columns.contains(n)) col(n)
-          else lit(null).cast(unioned(n).dataType).as(n)): _*)
-        .withColumn("_change_type", lit("update_preimage"))
-    }
-    val delRows = staged("delete").map(_.withColumn("_change_type", lit("delete")))
-    (post ++ pre ++ delRows).reduceOption(_ unionByName _).foreach {
-      _.withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(tablePath(layer, table) + ".__changes")
-    }
-    promoteStagedActions(staging, pcols, Set("keep", "insert", "update"))
-    swapPartitions(layer, table, staging, retireAll, pcols.length)
-    logOp(layer, table, "MERGE", ins, upd,
-      outputRows = ins + upd + keptPlan + carried, version = ver, deleted = del)
-    primeFeedSchemaCache(layer, table, unioned)
-    Upsert.MergeClauseMetrics(ins, upd, del, keptPlan + carried)
-  }
-
 
   /** CREATE OR REPLACE TABLE AS SELECT (reference bronze_arxiv.py:102).
     * Writes to a staging dir first, then swaps — safe when `df` reads
@@ -622,16 +294,8 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     val keptCarried =
       if (untouched.isEmpty) 0L
       else footerRowCount(untouched)
-    val deletedRows = touchedDf.filter(hit)
-      .withColumn("_change_type", lit("delete"))
-      .withColumn("_commit_version", lit(ver))
-    val obs = org.apache.spark.sql.Observation()
-    deletedRows
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(target + ".__changes")
-    val deleted = obs.get("n").asInstanceOf[Long]
+    val deleted =
+      appendFeed(layer, table, ver, touchedDf.filter(hit).withColumn("_change_type", lit("delete")))
     retireAndSwap(layer, table, staging)
     logOp(layer, table, "DELETE", inserted = 0, updated = 0,
       outputRows = keptRewritten + keptCarried, version = ver, deleted = deleted)
@@ -737,14 +401,7 @@ private[sources] trait WarehouseDml { self: Warehouse =>
         }
       }: _*)
       .withColumn("_change_type", lit("update_postimage"))
-    val obs = org.apache.spark.sql.Observation()
-    pre.unionByName(post)
-      .withColumn("_commit_version", lit(ver))
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(target + ".__changes")
-    val updated = obs.get("n").asInstanceOf[Long] / 2
+    val updated = appendFeed(layer, table, ver, pre.unionByName(post)) / 2
     retireAndSwap(layer, table, staging)
     logOp(layer, table, "UPDATE", inserted = 0, updated = updated,
       outputRows = rewrittenRows + carriedRows, version = ver)
@@ -794,24 +451,48 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     }
   }
 
-  /** MERGE with the full Delta clause surface (what [[upsert]]'s fixed
-    * version-rule shape cannot express): any number of WHEN MATCHED
-    * [AND cond] THEN UPDATE-SET-star / DELETE clauses, conditional WHEN NOT
-    * MATCHED inserts, and WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE
-    * — routed through [[graft.operators.Upsert.planClauses]] (one
-    * full-outer shuffle, per-column CASE chains, duplicate-source
-    * raise) and written with the same machinery as [[upsert]]:
-    * file-granular COW (only files holding a source-matched key are
-    * decoded; the rest byte-copy — except when a BY SOURCE clause
-    * exists, which can touch ANY target row, so every file rewrites),
-    * staged swap, change-feed rows for every image (insert /
-    * update_preimage / update_postimage / delete), zero-change no-op
-    * commits, schema evolution via union-align. Hive-partitioned
-    * tables route to [[mergeClausesPartitioned]] — the partition-
-    * scoped slice machinery with the same BY-SOURCE widening rule
-    * (any target row may change → every partition in the slice).
-    * Conditions and
-    * assignment expressions reference the sides as `t.`/`s.` — see
+  // ---- MERGE: one front end, one copy-on-write body ----
+  //
+  // Every MERGE entry point is a clause set: [[upsert]] is
+  // [[mergeClauses]] over [[MergeClause.upsertShape]], [[upsertMor]]
+  // is [[mergeClausesMor]] over the same shape. [[mergeFrontEnd]] is
+  // shared by both bodies; [[mergeCow]] serves flat and hive-partitioned
+  // tables alike (a flat table is the `pcols.isEmpty` case), and the
+  // merge-on-read body lives with the tombstones in [[WarehouseMor]].
+
+  /** MERGE INTO (reference silver_arxiv.py:130-152) — the conditional
+    * upsert `WHEN MATCHED AND s.version > t.version THEN UPDATE SET *
+    * WHEN NOT MATCHED THEN INSERT *`, run as [[mergeClauses]] over
+    * [[MergeClause.upsertShape]], with metrics to the ledger exactly
+    * like Delta's operationMetrics (numTargetRowsInserted/Updated/
+    * numOutputRows). `WriteMetrics.kept` counts every target row the
+    * merge left as it was, carried files included. Several source rows
+    * matching one target row raise only when one of them would update
+    * it (Delta's rule); duplicates that all lose the version rule keep
+    * the target row once.
+    */
+  def upsert(
+      layer: String,
+      table: String,
+      src: DataFrame,
+      keys: Seq[String],
+      versionCol: String
+  ): Upsert.WriteMetrics = {
+    val (m, nm, bs) = MergeClause.upsertShape(versionCol)
+    mergeClauses(layer, table, src, keys, m, nm, bs).writeMetrics
+  }
+
+  /** MERGE with the full Delta clause surface: any number of WHEN
+    * MATCHED [AND cond] THEN UPDATE-SET-star / DELETE clauses,
+    * conditional WHEN NOT MATCHED inserts, and WHEN NOT MATCHED BY
+    * SOURCE THEN UPDATE/DELETE — classified by
+    * [[graft.operators.Upsert.planClauses]] (one full-outer join,
+    * per-column CASE chains, duplicate-source raise) and written
+    * copy-on-write by [[mergeCow]]: file-granular rewrite, staged
+    * swap, change-feed rows for every image (insert / update_preimage
+    * / update_postimage / delete), zero-change no-op commits, schema
+    * evolution via union-align. Conditions and assignment expressions
+    * reference the sides as `t.`/`s.` — see
     * [[graft.operators.MergeClause]].
     */
   def mergeClauses(
@@ -819,185 +500,40 @@ private[sources] trait WarehouseDml { self: Warehouse =>
       table: String,
       src: DataFrame,
       keys: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource] = Seq.empty
+      matched: Seq[MergeClause.Matched],
+      notMatched: Seq[MergeClause.NotMatched],
+      bySource: Seq[MergeClause.BySource] = Seq.empty
   ): Upsert.MergeClauseMetrics =
     withWriterLock(layer, table)(
-      mergeClausesImpl(layer, table, src, keys, matched, notMatched, bySource))
+      mergeFrontEnd(layer, table, src, keys, matched, notMatched, bySource)(
+        mergeCow(layer, table, _, _, keys, matched, notMatched, bySource)))
 
-  private[sources] def mergeClausesImpl(
-      layer: String,
-      table: String,
-      src0: DataFrame,
-      keys: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource]
-  ): Upsert.MergeClauseMetrics = {
-    repairCrashedSwap(layer, table)
-    materializeDv(layer, table) // rewrite never runs against live tombstones
-    if (!tableExists(layer, table)) {
-      // same bootstrap as [[upsert]]: an absent target means every
-      // unconditionally-insertable source row seeds the table
-      require(bySource.isEmpty && matched.isEmpty,
-        s"$layer.$table does not exist — only INSERT clauses can seed a new table")
-      require(notMatched.forall {
-        case graft.operators.MergeClause.InsertNotMatched(_, values) => values.isEmpty
-      }, s"$layer.$table does not exist — INSERT (cols) VALUES seeding needs a schema; use INSERT *")
-      val seed = notMatched.foldRight(lit(false): Column)((c, els) =>
-        c.cond.map(_ || els).getOrElse(lit(true)))
-      val n = createOrReplace(layer, table,
-        src0.alias("s").filter(seed))
-      return Upsert.MergeClauseMetrics(inserted = n, updated = 0, deleted = 0, kept = 0)
-    }
-    val gen = applyGenerated(layer, table, src0, "MERGE")
-    require(!keys.exists(k => identityColumns(layer, table).exists(_._1.equalsIgnoreCase(k))),
-      "cannot MERGE on a GENERATED ALWAYS AS IDENTITY column — sources cannot carry it")
-    val (src, idHighs) = applyIdentity(layer, table, gen, allowCarry = false)
-    commitIdentity(layer, table, idHighs) // ids burn even if the merge refuses
-    enforceConstraints(layer, table, src, "MERGE")
-    val pcols = partitionColumns(layer, table)
-    if (pcols.nonEmpty)
-      return mergeClausesPartitioned(layer, table, src, keys,
-        matched, notMatched, bySource, pcols)
-    val tgt0    = this.table(layer, table)
-    val unioned = unionSchema(tgt0.schema, src.schema)
-    validateClauseAssignments(layer, table, unioned.fieldNames.toSeq,
-      matched, notMatched, bySource)
-    val newCols = unioned.fieldNames.filterNot(tgt0.columns.contains)
-    val allFiles = tgt0.inputFiles.map(normDataFile).toSeq
-    // file-granular COW applies only when no BY SOURCE clause exists
-    // (a by-source clause can modify rows in ANY file); evolution
-    // forces the full rewrite as in [[upsert]]
-    val matchedFiles: Set[String] =
-      if (newCols.nonEmpty || bySource.nonEmpty) allFiles.toSet
-      else {
-        val srcKeys = src.select(keys.map(col): _*).distinct()
-        val tgtF    = tgt0.withColumn("__graft_file", input_file_name())
-        tgtF
-          .join(srcKeys, keys.map(k => tgtF(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
-          .select(col("__graft_file")).distinct()
-          .collect().map(r => normDataFile(r.getString(0))).toSet
-      }
-    val untouched = allFiles.filterNot(matchedFiles)
-    val touchedTgt =
-      if (matchedFiles.isEmpty) tgt0.limit(0)
-      else readFilesAligned(matchedFiles.toSeq, tgt0.schema)
-    val idCols = identityColumns(layer, table).map(_._1).toSet
-    val merged = Upsert.planClauses(alignTo(touchedTgt, unioned), alignTo(src, unioned),
-      keys, matched, notMatched, bySource, insertOnlyCols = idCols)
-    // narrow classification pass (Catalyst prunes the join to keys +
-    // clause-condition columns + marks), exactly like [[upsert]]'s
-    val counts = merged.groupBy(col(Upsert.ActionCol)).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val ins = counts.getOrElse("insert", 0L)
-    val upd = counts.getOrElse("update", 0L)
-    val del = counts.getOrElse("delete", 0L)
-    val keptPlan = counts.getOrElse("keep", 0L)
-    if (ins == 0 && upd == 0 && del == 0 && newCols.isEmpty) {
-      // zero-change no-op commit (unified convention); kept = in-plan
-      // keeps + footer-counted carried rows
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      val carried0 =
-        if (untouched.isEmpty) 0L else footerRowCount(untouched)
-      return Upsert.MergeClauseMetrics(0, 0, 0, keptPlan + carried0)
-    }
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
-    // footer-only count of the carried files, before the feed write
-    // (minimal feed-to-ledger commit window, see [[upsert]])
-    val carried =
-      if (untouched.isEmpty) 0L
-      else footerRowCount(untouched)
-    // ONE full-width execution of the clause plan (r19, see
-    // [[Warehouse.stageByAction]]): delete-action rows land in their
-    // own staged directory — they already carry the target pre-image
-    // values, so the feed's delete rows read straight off the staged
-    // bytes too; that directory is then dropped (never promoted into
-    // the table layout). The old feed write re-ran the clause join
-    // full-width a second time.
-    val byAction = stageByAction(merged, staging, Upsert.ActionCol, Seq.empty)
-    copyFilesInto(untouched.map((_, "")), staging)
-    def staged(action: String): Option[DataFrame] =
-      byAction.get(action).filter(_.nonEmpty)
-        .map(fls => readFilesAligned(fls, unioned))
-    // change feed: post-images for inserts/updates, pre-images for
-    // updates (semi-join of the pre-merge touched files against the
-    // staged updated keys), and the staged deleted rows
-    val post = Seq(
-      staged("insert").map(_.withColumn("_change_type", lit("insert"))),
-      staged("update").map(_.withColumn("_change_type", lit("update_postimage")))).flatten
-    val pre = staged("update").map { u =>
-      val updatedKeys = u.select(keys.map(col): _*)
-      touchedTgt
-        .join(updatedKeys,
-          keys.map(k => touchedTgt(k) <=> updatedKeys(k)).reduce(_ && _), "left_semi")
-        .select(unioned.fieldNames.toSeq.map(n =>
-          if (tgt0.columns.contains(n)) col(n)
-          else lit(null).cast(unioned(n).dataType).as(n)): _*)
-        .withColumn("_change_type", lit("update_preimage"))
-    }
-    val delRows = staged("delete").map(_.withColumn("_change_type", lit("delete")))
-    (post ++ pre ++ delRows).reduceOption(_ unionByName _).foreach {
-      _.withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(tablePath(layer, table) + ".__changes")
-    }
-    promoteStagedActions(staging, Seq.empty, Set("keep", "insert", "update"))
-    ensureStagedSchema(staging, unioned)
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "MERGE", ins, upd,
-      outputRows = ins + upd + keptPlan + carried, version = ver, deleted = del)
-    primeSchemaCache(layer, table, unioned)
-    primeFeedSchemaCache(layer, table, unioned)
-    Upsert.MergeClauseMetrics(ins, upd, del, keptPlan + carried)
-  }
-
-  /** Merge-on-read twin of [[mergeClauses]] (the full clause surface
-    * at O(delta) commit cost, like [[upsertMor]] for the upsert
-    * shape): updated AND deleted target rows tombstone at their old
-    * positions, post-images and inserts append under the commit's
-    * rollback manifest, no existing file rewrites — tombstones are the
-    * natural delete-action mechanism, a MOR MERGE DELETE writes
-    * positions only. Feed rows cover every image (insert /
-    * update_preimage / update_postimage / delete). Works on any
-    * layout; BY SOURCE clauses classify against the whole visible
-    * table (the join must see every target row) but still commit
-    * O(changes).
+  /** The front end both MERGE bodies share: crash repair, the
+    * absent-table bootstrap, generated and identity columns with the
+    * identity-key refusal, constraints, and clause-assignment
+    * validation. Runs `body` on the prepared source and the union of
+    * the target and source schemas, or returns the seeding metrics when
+    * the table was absent.
     */
-  def mergeClausesMor(
-      layer: String,
-      table: String,
-      src: DataFrame,
-      keys: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource] = Seq.empty
-  ): Upsert.MergeClauseMetrics =
-    withWriterLock(layer, table)(
-      mergeClausesMorImpl(layer, table, src, keys, matched, notMatched, bySource))
-
-  private[sources] def mergeClausesMorImpl(
+  private[sources] def mergeFrontEnd(
       layer: String,
       table: String,
       src0: DataFrame,
       keys: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource]
-  ): Upsert.MergeClauseMetrics = {
+      matched: Seq[MergeClause.Matched],
+      notMatched: Seq[MergeClause.NotMatched],
+      bySource: Seq[MergeClause.BySource]
+  )(body: (DataFrame, StructType) => Upsert.MergeClauseMetrics): Upsert.MergeClauseMetrics = {
     repairCrashedSwap(layer, table)
     if (!tableExists(layer, table)) {
-      require(bySource.isEmpty && matched.isEmpty,
-        s"$layer.$table does not exist — only INSERT clauses can seed a new table")
-      require(notMatched.forall {
-        case graft.operators.MergeClause.InsertNotMatched(_, values) => values.isEmpty
-      }, s"$layer.$table does not exist — INSERT (cols) VALUES seeding needs a schema; use INSERT *")
+      // an absent target: every source row is NOT MATCHED, so the
+      // matched and BY SOURCE clauses have nothing to act on and the
+      // rows the INSERT clauses claim seed the table
+      require(notMatched.forall { case MergeClause.InsertNotMatched(_, values) => values.isEmpty },
+        s"$layer.$table does not exist — INSERT (cols) VALUES seeding needs a schema; use INSERT *")
       val seed = notMatched.foldRight(lit(false): Column)((c, els) =>
         c.cond.map(_ || els).getOrElse(lit(true)))
+      // createOrReplace generates, assigns identities and enforces itself
       val n = createOrReplace(layer, table, src0.alias("s").filter(seed))
       return Upsert.MergeClauseMetrics(inserted = n, updated = 0, deleted = 0, kept = 0)
     }
@@ -1005,86 +541,228 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     require(!keys.exists(k => identityColumns(layer, table).exists(_._1.equalsIgnoreCase(k))),
       "cannot MERGE on a GENERATED ALWAYS AS IDENTITY column — sources cannot carry it")
     val (src, idHighs) = applyIdentity(layer, table, gen, allowCarry = false)
-    commitIdentity(layer, table, idHighs)
+    commitIdentity(layer, table, idHighs) // ids burn even if the merge refuses
+    // every new row image a merge can store comes from the incoming
+    // batch (kept rows were validated when the constraint was added) —
+    // validated whole, so a row a conditional merge would discard still
+    // rejects the batch: stricter than Delta's written-rows-only check,
+    // and cheaper than running the merge plan just to find the winners
     enforceConstraints(layer, table, src, "MERGE")
-    val target = tablePath(layer, table)
-    val raw    = mergedRead(layer, table)
-    val depth  = partitionColumns(layer, table).length
-    val tombstoneRows = dvRowsFor(layer, table, Long.MaxValue)
-    val visible = tombstoneRows match {
-      case Some(dv) => dvAntiJoin(withDvMeta(raw, depth), dv)
-      case None     => withDvMeta(raw, depth)
-    }
-    val unioned    = unionSchema(raw.schema, src.schema)
-    validateClauseAssignments(layer, table, unioned.fieldNames.toSeq,
-      matched, notMatched, bySource)
+    // schema evolution: both sides align to the union schema (new
+    // source columns null-backfill old target rows, missing source
+    // columns are tolerated)
+    val tgtSchema = mergedSchemaOf(layer, table).getOrElse(mergedRead(layer, table).schema)
+    val unioned   = unionSchema(tgtSchema, src.schema)
+    validateClauseAssignments(layer, table, unioned.fieldNames.toSeq, matched, notMatched, bySource)
+    body(src, unioned)
+  }
+
+  /** The copy-on-write MERGE body, for both layouts. Only target files
+    * holding a source key are decoded into the merge; every other file
+    * of the scope byte-copies into the staged generation and its rows
+    * count as carried. The layout decides three things only:
+    *
+    *   - the scope: a flat table's scope is the whole table (one
+    *     partition, the empty tuple); a partitioned table's is the
+    *     source rows' partitions ∪ the matched target rows' current
+    *     homes, so a source row that changes a matched row's partition
+    *     rewrites BOTH directories and the row moves without
+    *     duplication;
+    *   - clustering the staged rewrite on the partition columns
+    *     ([[clusterStaged]]);
+    *   - the swap: the whole table, or only the scope's directories.
+    *
+    * A BY SOURCE clause can modify any target row and a source-only
+    * new column must null-backfill every file, so either one rewrites
+    * every file of the scope — and BY SOURCE widens a partitioned scope
+    * to every partition. Delete-action rows leave the rewrite and land
+    * in the feed as `delete` pre-images.
+    */
+  private def mergeCow(
+      layer: String,
+      table: String,
+      src: DataFrame,
+      unioned: StructType,
+      keys: Seq[String],
+      matched: Seq[MergeClause.Matched],
+      notMatched: Seq[MergeClause.NotMatched],
+      bySource: Seq[MergeClause.BySource]
+  ): Upsert.MergeClauseMetrics = {
+    materializeDv(layer, table) // rewrite never runs against live tombstones
+    val pcols = partitionColumns(layer, table)
+    require(
+      pcols.forall(src.columns.contains),
+      s"partitioned MERGE source must carry the partition columns (${pcols.mkString(",")})")
+    val target     = tablePath(layer, table)
+    val tgt0       = this.table(layer, table)
     val srcAligned = alignTo(src, unioned)
-    val tgtAligned = visible.select(
-      unioned.fields.toSeq.map { f =>
-        if (visible.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col("__dv_f"), col("__dv_p")): _*)
-    val changesPlan = Upsert.planMorChangesClauses(tgtAligned, srcAligned, keys,
-      matched, notMatched, bySource, metaCols = Seq("__dv_f", "__dv_p"),
-      insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
-    // metrics FIRST, on the unpersisted plan (narrow, column-pruned):
-    // a zero-change re-run must exit before anything full-width
-    // materializes — persisting before the counts pass made the no-op
-    // path read every column (measured +0.4 s on q112's warm trials)
-    val counts = changesPlan.groupBy(col(Upsert.ActionCol)).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val inserted = counts.getOrElse("insert", 0L)
-    val updated  = counts.getOrElse("update", 0L)
-    val deleted  = counts.getOrElse("delete", 0L)
-    def visibleCount(): Long =
-      raw.count() - tombstoneRows.map(_.count()).getOrElse(0L)
-    if (inserted == 0 && updated == 0 && deleted == 0) {
-      logOp(layer, table, "MERGE_MOR", inserted = 0, updated = 0, outputRows = 0)
-      return Upsert.MergeClauseMetrics(0, 0, 0, visibleCount())
+    val newCols    = unioned.fieldNames.filterNot(tgt0.columns.contains)
+    val rewriteAll = newCols.nonEmpty || bySource.nonEmpty
+    // ONE semi-join pass yields the matched files (the COW rewrite set)
+    // and, on a partitioned table, the matched rows' partitions —
+    // `input_file_name()` rides along the same scan
+    def probe(scan: DataFrame): Array[Row] = {
+      val tgtF    = scan.withColumn("__graft_file", input_file_name())
+      val srcKeys = srcAligned.select(keys.map(col): _*).distinct()
+      tgtF
+        .join(srcKeys, keys.map(k => tgtF(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
+        .select((pcols.map(c => col(c).cast("string")) :+ col("__graft_file")): _*)
+        .distinct().collect()
     }
-    // persist the O(delta) change set (r19): tombstones, landed files
-    // and the three feed slices otherwise each re-run the full-outer
-    // join over the whole visible table. Bounded by the batch (the MOR
-    // contract), same within-op persist as [[WarehouseMor.deleteMor]];
-    // the first write below materializes it in one pass.
-    val changes = changesPlan.persist()
-    try {
-      val kept = visibleCount() - updated - deleted
-      val ver  = nextVersion(s"$layer.$table")
-      val dataCols = unioned.fields.toSeq.map(f => col(f.name))
-      // 1. tombstones for the updated AND deleted rows' old positions
-      changes.filter(col(Upsert.ActionCol).isin("update", "delete"))
-        .select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(dvPath(layer, table).toString)
-      // 2. post-images + inserts land as new files (manifest rollback);
-      //    deletes land nothing — their tombstone IS the commit, so a
-      //    delete-only merge appends zero data files (like [[deleteMor]])
-      if (inserted + updated > 0)
-        morLandFiles(layer, table, ver,
-          changes.filter(col(Upsert.ActionCol).isin("insert", "update"))
-            .select(dataCols: _*))
-      // 3. feed: insert / update_preimage / update_postimage / delete
-      val ins = changes.filter(col(Upsert.ActionCol) === "insert")
-        .select(dataCols: _*).withColumn("_change_type", lit("insert"))
-      val preImg = changes.filter(col(Upsert.ActionCol).isin("update", "delete"))
-        .select(unioned.fields.toSeq.map(f => col(s"__pre_${f.name}").as(f.name)) :+
-          when(col(Upsert.ActionCol) === "update", lit("update_preimage"))
-            .otherwise(lit("delete")).as("_change_type"): _*)
-      val postImg = changes.filter(col(Upsert.ActionCol) === "update")
-        .select(dataCols: _*).withColumn("_change_type", lit("update_postimage"))
-      ins.unionByName(preImg).unionByName(postImg)
-        .withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(target + ".__changes")
-      logOp(layer, table, "MERGE_MOR", inserted = inserted, updated = updated,
-        outputRows = 0, version = ver, deleted = deleted)
-      primeSchemaCache(layer, table, unioned)
-      primeFeedSchemaCache(layer, table, unioned)
-      Upsert.MergeClauseMetrics(inserted, updated, deleted, kept)
-    } finally { changes.unpersist(); () }
+    def probedFiles(rows: Array[Row]): Set[String] =
+      rows.map(r => normDataFile(r.getString(pcols.length))).toSet
+    // the scope: touched partition tuples, the live leaf dirs the swap
+    // retires, the files decoded into the merge, and the files carried
+    // as bytes (with their leaf dir)
+    val (touched, retireDirs, matchedFiles, carry) =
+      if (pcols.isEmpty) {
+        val all = tgt0.inputFiles.map(normDataFile).toSeq
+        val m   = if (rewriteAll) all.toSet else probedFiles(probe(tgt0))
+        (Seq(Seq.empty[String]), Seq.empty[String], m, all.filterNot(m).map((_, "")))
+      } else {
+        val srcParts = touchedPartitions(srcAligned, pcols)
+        // Partition-pruned probe (the Delta idiom "put the partition
+        // column in the ON clause"): when the merge keys CONTAIN every
+        // partition column, a matched row must already live in one of
+        // the source's partitions, so the probe scans only that slice
+        // (PartitionFilters, zero I/O outside it). A key-only merge
+        // probes the whole table: a matched key may live in — and move
+        // from — any partition. With BY SOURCE the scope is every
+        // partition and every file rewrites, so the probe is skipped.
+        val rows =
+          if (bySource.nonEmpty) Array.empty[Row]
+          else if (pcols.forall(keys.contains) && srcParts.nonEmpty)
+            probe(pruneToTouched(tgt0, srcParts, pcols))
+          else probe(tgt0)
+        val touched =
+          if (bySource.nonEmpty) touchedPartitions(tgt0, pcols)
+          else (srcParts ++ rows.map(r => pcols.indices.map(r.getString).toSeq)).distinct
+        if (touched.isEmpty) {
+          // touched empty ⟺ the source has zero rows. Documented
+          // divergence: a ZERO-ROW source carrying a new column does not
+          // evolve the schema here (Delta would update metadata); with
+          // no rows there is no slice to rewrite the column into
+          logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
+          return Upsert.MergeClauseMetrics(0, 0, 0, 0)
+        }
+        val rd    = retireDirsFor(new Path(target), pcols, tgt0.schema, touched)
+        val slice = dataFilesUnder(new Path(target), rd)
+        val m     = if (rewriteAll) slice.map(_._1).toSet else probedFiles(rows)
+        (touched, rd, m, slice.filterNot(p => m.contains(p._1)))
+      }
+    val touchedTgt =
+      if (matchedFiles.isEmpty) tgt0.limit(0)
+      else readFilesAligned(matchedFiles.toSeq, tgt0.schema, basePath = Some(target))
+    val merged = Upsert.planClauses(alignTo(touchedTgt, unioned), srcAligned, keys,
+      matched, notMatched, bySource, insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
+    // Action counts AND the output rows' partition tuples in one narrow
+    // job (Catalyst prunes the join to keys + condition columns +
+    // marks): a clause expression may ASSIGN a partition column, landing
+    // rows in a partition outside `touched`, which must join the scope
+    // before its retire dirs and carried files are fixed, or the swap
+    // would replace that live directory with only the merged rows
+    val actionParts = merged
+      .groupBy((col(Upsert.ActionCol) +: pcols.map(c => col(c).cast("string"))): _*)
+      .count().collect()
+    val counts = actionParts.groupBy(_.getString(0))
+      .map { case (a, rs) => a -> rs.map(_.getLong(pcols.length + 1)).sum }.withDefaultValue(0L)
+    val (ins, upd, del, keptPlan) =
+      (counts("insert"), counts("update"), counts("delete"), counts("keep"))
+    // zero-change early exit: a re-run where every source row loses
+    // (an idempotent re-run) skips the rewrite, the feed append and the
+    // retired generation, but STILL records a MERGE 0/0 commit with a
+    // version bump — Delta logs a MERGE commit even at zero changed
+    // rows, and the reference reads DESCRIBE HISTORY after every run
+    // (silver_arxiv.py:175-184). A version with no generation folds
+    // into its predecessor on time travel, like APPEND. A source-only
+    // new column forces the rewrite even at zero changes (Delta's MERGE
+    // commit updates table metadata).
+    if (ins == 0 && upd == 0 && del == 0 && newCols.isEmpty) {
+      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
+      return Upsert.MergeClauseMetrics(0, 0, 0,
+        keptPlan + footerRowCount(carry.map(_._1), Some(target)))
+    }
+    // Widen the scope with any partition the merged OUTPUT lands in that
+    // the source/matched-homes probe missed (partition-column
+    // assignment). Those partitions' rows can never be key-matched (all
+    // matched homes are in `touched`), so the plan is unaffected: their
+    // live files byte-carry into the staging tree. A flat scope is
+    // already everything.
+    val outParts = actionParts.toSeq
+      .filter(r => r.getString(0) == "insert" || r.getString(0) == "update")
+      .map(r => pcols.indices.map(i => r.getString(i + 1)).toSeq)
+    val touchedAll = (touched ++ outParts).distinct
+    val (retireAll, carryAll) =
+      if (touchedAll.lengthCompare(touched.length) == 0) (retireDirs, carry)
+      else {
+        val rd = retireDirsFor(new Path(target), pcols, tgt0.schema, touchedAll)
+        (rd, dataFilesUnder(new Path(target), rd).filterNot(p => matchedFiles.contains(p._1)))
+      }
+    val staging = new Path(target + ".__staging")
+    fs.delete(staging, true)
+    val ver = nextVersion(s"$layer.$table")
+    // footer-only count BEFORE the feed write: the feed-to-ledger commit
+    // window must stay minimal — a streaming feed consumer waits on the
+    // commit (see WarehouseStreams.mvRefreshSink)
+    val carried = footerRowCount(carryAll.map(_._1), Some(target))
+    // ONE full-width execution of the clause plan (see
+    // [[Warehouse.stageByAction]]): the action rides as the innermost
+    // staging directory, so the staged files are the next generation
+    // unchanged and the feed's post-images (and the delete rows, which
+    // carry the target pre-image) read back as O(changes) staged bytes
+    val byAction = stageByAction(
+      if (pcols.isEmpty) merged else clusterStaged(merged, pcols, touchedAll.length),
+      staging, Upsert.ActionCol, pcols)
+    copyFilesInto(carryAll, staging)
+    def staged(action: String, changeType: String): Option[DataFrame] =
+      byAction.get(action).filter(_.nonEmpty).map(fls =>
+        readFilesAligned(fls, unioned, basePath = Some(staging.toString))
+          .withColumn("_change_type", lit(changeType)))
+    // update_preimage (full Delta CDF semantics): the replaced target
+    // rows, via a semi join of the pre-merge TOUCHED files against the
+    // staged updated keys (O(updated) rows). Without preimages a feed
+    // consumer cannot SUBTRACT an update, which is what incremental
+    // aggregate maintenance needs.
+    val updates = staged("update", "update_postimage")
+    val pre = updates.map { u =>
+      val updatedKeys = u.select(keys.map(col): _*)
+      alignTo(touchedTgt.join(updatedKeys,
+        keys.map(k => touchedTgt(k) <=> updatedKeys(k)).reduce(_ && _), "left_semi"), unioned)
+        .withColumn("_change_type", lit("update_preimage"))
+    }
+    Seq(staged("insert", "insert"), updates, pre, staged("delete", "delete")).flatten
+      .reduceOption(_ unionByName _)
+      .foreach(appendFeed(layer, table, ver, _))
+    promoteStagedActions(staging, pcols, Set("keep", "insert", "update"))
+    if (pcols.isEmpty) {
+      ensureStagedSchema(staging, unioned)
+      retireAndSwap(layer, table, staging)
+    } else swapPartitions(layer, table, staging, retireAll, pcols.length)
+    logOp(layer, table, "MERGE", ins, upd,
+      outputRows = ins + upd + keptPlan + carried, version = ver, deleted = del)
+    primeSchemaCache(layer, table, unioned)
+    primeFeedSchemaCache(layer, table, unioned)
+    Upsert.MergeClauseMetrics(ins, upd, del, keptPlan + carried)
+  }
+
+  /** Append one commit's change rows (`rows` carries `_change_type`)
+    * to the table's change feed, in the commit version's partition.
+    * Returns the number of rows written, observed from the write job.
+    */
+  private[sources] def appendFeed(
+      layer: String,
+      table: String,
+      ver: Long,
+      rows: DataFrame
+  ): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    rows
+      .withColumn("_commit_version", lit(ver))
+      .withColumn("_commit_part", lit(f"$ver%010d"))
+      .observe(obs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Append).partitionBy("_commit_part")
+      .parquet(tablePath(layer, table) + ".__changes")
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** INSERT INTO ... SELECT (reference silver_google_scholar.py:148).
@@ -1121,165 +799,5 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     logOp(layer, table, "APPEND", inserted = n, updated = 0, outputRows = n)
     primeSchemaCache(layer, table, aligned.schema)
     n
-  }
-
-  /** MERGE INTO (reference silver_arxiv.py:130-152) — conditional upsert
-    * via [[Upsert.mergeWithMetrics]], staged overwrite, metrics to the
-    * ledger exactly like Delta's operationMetrics
-    * (numTargetRowsInserted/Updated/numOutputRows).
-    *
-    * Every merge also records its change rows (the Delta Change Data
-    * Feed replacement): rows whose action is insert/update are
-    * appended to `<table>.__changes` with `_change_type` ∈
-    * {insert, update_postimage} and `_commit_version` — a filtered
-    * re-run of the same deterministic merge plan the metrics came
-    * from (column-pruned by Catalyst per pass; the plan is never
-    * cached full-width — see [[Upsert.MergeResult]]). Kept rows are
-    * never written (a consumer tails only what changed — the property
-    * that makes incremental downstream refresh linear in the delta,
-    * not the table). CTAS and APPEND don't write feed rows: a CTAS is
-    * a new base (read it directly) and an append's delta IS its input;
-    * only MERGE interleaves changes into existing data.
-    */
-  def upsert(
-      layer: String,
-      table: String,
-      src: DataFrame,
-      keys: Seq[String],
-      versionCol: String
-  ): Upsert.WriteMetrics =
-    withWriterLock(layer, table)(upsertImpl(layer, table, src, keys, versionCol))
-
-  private[sources] def upsertImpl(
-      layer: String,
-      table: String,
-      src0: DataFrame,
-      keys: Seq[String],
-      versionCol: String
-  ): Upsert.WriteMetrics = {
-    repairCrashedSwap(layer, table)
-    materializeDv(layer, table) // rewrite never runs against live tombstones
-    if (!tableExists(layer, table)) {
-      val n = createOrReplace(layer, table, src0) // generates + enforces itself
-      return Upsert.WriteMetrics(inserted = n, updated = 0, kept = 0)
-    }
-    val gen = applyGenerated(layer, table, src0, "MERGE")
-    require(!keys.exists(k => identityColumns(layer, table).exists(_._1.equalsIgnoreCase(k))),
-      "cannot MERGE on a GENERATED ALWAYS AS IDENTITY column — sources cannot carry it")
-    val (src, idHighs) = applyIdentity(layer, table, gen, allowCarry = false)
-    commitIdentity(layer, table, idHighs) // ids burn even if the merge refuses
-    // every new row image a merge can store comes from the incoming
-    // batch (kept rows were validated when the constraint was added) —
-    // validated whole, so a row a conditional merge would discard still
-    // rejects the batch: stricter than Delta's written-rows-only check,
-    // and cheaper than running the merge plan just to find the winners
-    enforceConstraints(layer, table, src, "MERGE")
-    val pcols = partitionColumns(layer, table)
-    if (pcols.nonEmpty) return upsertPartitioned(layer, table, src, keys, versionCol, pcols)
-    // schema evolution: both sides align to the union schema before
-    // the merge (new source columns null-backfill old target rows,
-    // missing source columns tolerated) — free here, since an upsert
-    // rewrites the table generation anyway
-    val tgt0    = this.table(layer, table)
-    val unioned = unionSchema(tgt0.schema, src.schema)
-    // File-granular COW for MERGE: a target file needs rewriting only
-    // if it holds a row whose key the source carries — one narrow
-    // (keys + file) semi-join pass finds them; every other file
-    // byte-copies into the new generation and its rows never enter the
-    // merge join (they would all be "keep"). Inserts write into the
-    // fresh part files regardless. A source-only NEW column forces the
-    // full rewrite instead: evolution must null-backfill every file.
-    val newCols = unioned.fieldNames.filterNot(tgt0.columns.contains)
-    val allFiles = tgt0.inputFiles.map(normDataFile).toSeq
-    val matchedFiles: Set[String] =
-      if (newCols.nonEmpty) allFiles.toSet
-      else {
-        val srcKeys = src.select(keys.map(col): _*).distinct()
-        val tgtF    = tgt0.withColumn("__graft_file", input_file_name())
-        tgtF
-          .join(srcKeys, keys.map(k => tgtF(k) <=> srcKeys(k)).reduce(_ && _), "left_semi")
-          .select(col("__graft_file")).distinct()
-          .collect().map(r => normDataFile(r.getString(0))).toSet
-      }
-    val untouched = allFiles.filterNot(matchedFiles)
-    val touchedTgt =
-      if (matchedFiles.isEmpty) tgt0.limit(0)
-      else readFilesAligned(matchedFiles.toSeq, tgt0.schema)
-    val mr = Upsert.mergeWithMetrics(alignTo(touchedTgt, unioned), alignTo(src, unioned),
-      keys, versionCol, insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
-    val m  = mr.metrics
-    // zero-change early exit: the metrics pass is a narrow column-pruned
-    // aggregation, so a merge where every source row loses the version
-    // rule (an idempotent re-run) is detected cheaply — skip the
-    // rewrite, the feed append, and the retired generation, but STILL
-    // record a MERGE 0/0 ledger commit with a version bump: Delta logs
-    // a MERGE commit even when operationMetrics are all zero, and the
-    // reference reads DESCRIBE HISTORY after every run
-    // (silver_arxiv.py:175-184) — a re-run must report "inserted 0 /
-    // updated 0", not surface the previous op as its last history row.
-    // A version with no generation folds into its predecessor on
-    // time travel, exactly like APPEND.
-    // (the newCols check above also forces the rewrite on a zero-change
-    // merge whose source carries a new column — Delta's MERGE commit
-    // updates table metadata even at zero changed rows)
-    if (m.inserted == 0 && m.updated == 0 && newCols.isEmpty) {
-      mr.unpersist()
-      logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-      return m
-    }
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
-    // footer-only count BEFORE the feed write: the feed-to-ledger
-    // commit window must stay minimal — a streaming feed consumer
-    // waits on the commit (see WarehouseStreams.mvRefreshSink)
-    val carried =
-      if (untouched.isEmpty) 0L
-      else footerRowCount(untouched)
-    try {
-      // ONE full-width execution of the merge plan (r19): the output
-      // stages hive-partitioned by the action column — see the section
-      // note at [[Warehouse.stageByAction]]. The old feed write below
-      // re-ran the join full-width a third time just to drop the kept
-      // rows; the post-images now read back as O(changes) staged bytes.
-      val byAction = stageByAction(mr.merged, staging, Upsert.ActionCol, Seq.empty)
-      copyFilesInto(untouched.map((_, "")), staging)
-      def staged(action: String): Option[DataFrame] =
-        byAction.get(action).filter(_.nonEmpty)
-          .map(fls => readFilesAligned(fls, unioned))
-      val post = Seq(
-        staged("insert").map(_.withColumn("_change_type", lit("insert"))),
-        staged("update").map(_.withColumn("_change_type", lit("update_postimage")))).flatten
-      // update_preimage (full Delta CDF semantics): the replaced
-      // target rows, via a semi join of the pre-merge TOUCHED files
-      // against the updated keys — read from the staged update files
-      // (O(updated) rows, broadcast), not a filtered join re-run.
-      // Without preimages a feed consumer cannot SUBTRACT an update,
-      // which is what incremental aggregate maintenance needs.
-      val pre = staged("update").map { u =>
-        val updatedKeys = u.select(keys.map(col): _*)
-        touchedTgt
-          .join(updatedKeys,
-            keys.map(k => touchedTgt(k) <=> updatedKeys(k)).reduce(_ && _), "left_semi")
-          .select(unioned.fieldNames.map(n =>
-            if (tgt0.columns.contains(n)) col(n)
-            else lit(null).cast(unioned(n).dataType).as(n)): _*)
-          .withColumn("_change_type", lit("update_preimage"))
-      }
-      (post ++ pre).reduceOption(_ unionByName _).foreach {
-        _.withColumn("_commit_version", lit(ver))
-          .withColumn("_commit_part", lit(f"$ver%010d"))
-          .write.mode(SaveMode.Append).partitionBy("_commit_part")
-          .parquet(tablePath(layer, table) + ".__changes")
-      }
-      promoteStagedActions(staging, Seq.empty, Set("keep", "insert", "update"))
-      ensureStagedSchema(staging, unioned)
-    } finally mr.unpersist()
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "MERGE", m.inserted, m.updated,
-      outputRows = m.outputRows + carried, version = ver)
-    primeSchemaCache(layer, table, unioned)
-    primeFeedSchemaCache(layer, table, unioned)
-    m
   }
 }

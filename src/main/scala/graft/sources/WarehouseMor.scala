@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.operators.Upsert
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import graft.operators.{MergeClause, Upsert}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -367,7 +367,6 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       matchRows: DataFrame => DataFrame
   ): Long = {
     repairCrashedSwap(layer, table)
-    val target = tablePath(layer, table)
     val raw    = mergedRead(layer, table)
     val depth  = partitionColumns(layer, table).length
     val visible = dvRowsFor(layer, table, Long.MaxValue) match {
@@ -389,12 +388,8 @@ private[sources] trait WarehouseMor { self: Warehouse =>
         .write.mode(SaveMode.Append).partitionBy("_commit_part")
         .parquet(dvPath(layer, table).toString)
       val deleted = obs.get("n").asInstanceOf[Long]
-      m.drop("__dv_f", "__dv_p")
-        .withColumn("_change_type", lit("delete"))
-        .withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(target + ".__changes")
+      appendFeed(layer, table, ver,
+        m.drop("__dv_f", "__dv_p").withColumn("_change_type", lit("delete")))
       logOp(layer, table, "DELETE_MOR", inserted = 0, updated = 0,
         outputRows = 0, version = ver, deleted = deleted)
       primeSchemaCache(layer, table, raw.schema)
@@ -444,7 +439,6 @@ private[sources] trait WarehouseMor { self: Warehouse =>
             s"$c derives from — rewrite via createOrReplace to keep $c consistent")
       }
     }
-    val target = tablePath(layer, table)
     val raw    = mergedRead(layer, table)
     assignments.keys.foreach(c =>
       require(raw.columns.contains(c), s"UPDATE assigns unknown column $c"))
@@ -486,12 +480,8 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       // manifest (rollback + time-travel hiding), then rename in
       morLandFiles(layer, table, ver, post)
       // 3. feed images, 4. ledger commit
-      pre.withColumn("_change_type", lit("update_preimage"))
-        .unionByName(post.withColumn("_change_type", lit("update_postimage")))
-        .withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(target + ".__changes")
+      appendFeed(layer, table, ver, pre.withColumn("_change_type", lit("update_preimage"))
+        .unionByName(post.withColumn("_change_type", lit("update_postimage"))))
       logOp(layer, table, "UPDATE_MOR", inserted = 0, updated = updated,
         outputRows = 0, version = ver)
       primeSchemaCache(layer, table, raw.schema)
@@ -502,22 +492,12 @@ private[sources] trait WarehouseMor { self: Warehouse =>
 
 
   /** MERGE via deletion vectors (completing the merge-on-read DML
-    * triad with [[deleteMor]] and [[updateMor]]): the same conditional
-    * upsert semantics as [[upsert]] — version-rule updates, inserts,
-    * duplicate-source raise — at O(delta) commit cost: updated target
-    * rows TOMBSTONE at their old positions, post-images and inserts
-    * APPEND as new files under the commit's rollback manifest, and
-    * not one existing file is decoded or rewritten, on any layout
-    * (the hive-partitioned case needs no partition-scoped machinery —
-    * tombstones are positional and appends partition themselves).
-    * Schema evolution is rewrite-free too: appended files carry the
-    * unioned schema and older files surface the new columns as null
-    * through the merged read. Feed rows (insert / update_preimage /
-    * update_postimage), constraints, generated and identity columns
-    * behave exactly as the COW path; a zero-change merge follows the
-    * unified no-op convention (note: unlike the COW path, a
-    * zero-change merge whose source carries a new column does NOT
-    * evolve the schema — nothing is appended to carry it).
+    * triad with [[deleteMor]] and [[updateMor]]): the conditional
+    * upsert of [[upsert]] — [[mergeClausesMor]] over
+    * [[MergeClause.upsertShape]] — at O(delta) commit cost. Updated
+    * target rows TOMBSTONE at their old positions, post-images and
+    * inserts APPEND as new files under the commit's rollback manifest,
+    * and not one existing file is decoded or rewritten, on any layout.
     * `WriteMetrics.kept` counts the visible target rows not updated,
     * derived from footer counts + the tombstone ledger, not a scan.
     */
@@ -527,97 +507,120 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       src: DataFrame,
       keys: Seq[String],
       versionCol: String
-  ): Upsert.WriteMetrics =
-    withWriterLock(layer, table)(upsertMorImpl(layer, table, src, keys, versionCol))
+  ): Upsert.WriteMetrics = {
+    val (m, nm, bs) = MergeClause.upsertShape(versionCol)
+    mergeClausesMor(layer, table, src, keys, m, nm, bs).writeMetrics
+  }
 
-  private[sources] def upsertMorImpl(
+  /** Merge-on-read twin of [[mergeClauses]] (the full clause surface
+    * at O(delta) commit cost): updated AND deleted target rows
+    * tombstone at their old positions, post-images and inserts append
+    * under the commit's rollback manifest, no existing file rewrites —
+    * tombstones are the natural delete-action mechanism, a MOR MERGE
+    * DELETE writes positions only. The hive-partitioned case needs no
+    * partition-scoped machinery: tombstones are positional and appends
+    * partition themselves. Feed rows cover every image (insert /
+    * update_preimage / update_postimage / delete); constraints,
+    * generated and identity columns behave exactly as the COW path
+    * (the shared [[mergeFrontEnd]]). BY SOURCE clauses classify against
+    * the whole visible table (the join must see every target row) but
+    * still commit O(changes). Schema evolution is rewrite-free too:
+    * appended files carry the unioned schema and older files surface
+    * the new columns as null through the merged read (unlike the COW
+    * path, a zero-change merge whose source carries a new column does
+    * NOT evolve the schema — nothing is appended to carry it).
+    */
+  def mergeClausesMor(
       layer: String,
       table: String,
-      src0: DataFrame,
+      src: DataFrame,
       keys: Seq[String],
-      versionCol: String
-  ): Upsert.WriteMetrics = {
-    repairCrashedSwap(layer, table)
-    if (!tableExists(layer, table)) {
-      val n = createOrReplace(layer, table, src0) // generates + enforces itself
-      return Upsert.WriteMetrics(inserted = n, updated = 0, kept = 0)
-    }
-    val gen = applyGenerated(layer, table, src0, "MERGE")
-    require(!keys.exists(k => identityColumns(layer, table).exists(_._1.equalsIgnoreCase(k))),
-      "cannot MERGE on a GENERATED ALWAYS AS IDENTITY column — sources cannot carry it")
-    val (src, idHighs) = applyIdentity(layer, table, gen, allowCarry = false)
-    commitIdentity(layer, table, idHighs)
-    enforceConstraints(layer, table, src, "MERGE")
-    val target = tablePath(layer, table)
-    val raw    = mergedRead(layer, table)
-    val depth  = partitionColumns(layer, table).length
+      matched: Seq[MergeClause.Matched],
+      notMatched: Seq[MergeClause.NotMatched],
+      bySource: Seq[MergeClause.BySource] = Seq.empty
+  ): Upsert.MergeClauseMetrics =
+    withWriterLock(layer, table)(
+      mergeFrontEnd(layer, table, src, keys, matched, notMatched, bySource)(
+        mergeMor(layer, table, _, _, keys, matched, notMatched, bySource)))
+
+  /** The merge-on-read MERGE body (see [[mergeClausesMor]]). */
+  private def mergeMor(
+      layer: String,
+      table: String,
+      src: DataFrame,
+      unioned: StructType,
+      keys: Seq[String],
+      matched: Seq[MergeClause.Matched],
+      notMatched: Seq[MergeClause.NotMatched],
+      bySource: Seq[MergeClause.BySource]
+  ): Upsert.MergeClauseMetrics = {
+    val raw   = mergedRead(layer, table)
+    val depth = partitionColumns(layer, table).length
     val tombstoneRows = dvRowsFor(layer, table, Long.MaxValue)
     val visible = tombstoneRows match {
       case Some(dv) => dvAntiJoin(withDvMeta(raw, depth), dv)
       case None     => withDvMeta(raw, depth)
     }
-    val unioned    = unionSchema(raw.schema, src.schema)
-    val srcAligned = alignTo(src, unioned)
     val tgtAligned = visible.select(
       unioned.fields.toSeq.map { f =>
         if (visible.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
         else lit(null).cast(f.dataType).as(f.name)
       } ++ Seq(col("__dv_f"), col("__dv_p")): _*)
-    val changesPlan = Upsert.planMorChanges(tgtAligned, srcAligned, keys, versionCol,
-      metaCols = Seq("__dv_f", "__dv_p"),
+    val changesPlan = Upsert.planMorChangesClauses(tgtAligned, alignTo(src, unioned), keys,
+      matched, notMatched, bySource, metaCols = Seq("__dv_f", "__dv_p"),
       insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
-    // metrics FIRST, on the unpersisted plan: Catalyst prunes the join
-    // to keys + version + marks, so a zero-change re-run stays a
-    // narrow pass and exits before anything full-width materializes
-    val counts = changesPlan.groupBy(col(Upsert.ActionCol)).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val inserted = counts.getOrElse("insert", 0L)
-    val updated  = counts.getOrElse("update", 0L)
+    // metrics FIRST, on the unpersisted plan (narrow, column-pruned):
+    // a zero-change re-run must exit before anything full-width
+    // materializes — persisting before the counts pass made the no-op
+    // path read every column (measured +0.4 s on q112's warm trials)
+    val counts = Upsert.actionCounts(changesPlan)
     // kept from metadata only: physical rows minus applicable
-    // tombstones minus the rows this merge updates
+    // tombstones minus the rows this merge updates or deletes
     def visibleCount(): Long =
       raw.count() - tombstoneRows.map(_.count()).getOrElse(0L)
-    if (inserted == 0 && updated == 0) {
+    if (counts.inserted == 0 && counts.updated == 0 && counts.deleted == 0) {
       logOp(layer, table, "MERGE_MOR", inserted = 0, updated = 0, outputRows = 0)
-      return Upsert.WriteMetrics(inserted = 0, updated = 0, kept = visibleCount())
+      return counts.copy(kept = visibleCount())
     }
-    // persist the O(delta) change set (r19): tombstones, landed files
-    // and the three feed slices otherwise each re-run the full-outer
-    // join over the whole visible table. Bounded by the batch (the MOR
-    // contract) — the same within-op persist [[deleteMorMatched]]/
-    // [[updateMorImpl]] already use; the first write below materializes
-    // it in one pass.
+    // persist the O(delta) change set: tombstones, landed files and the
+    // three feed slices otherwise each re-run the full-outer join over
+    // the whole visible table. Bounded by the batch (the MOR contract),
+    // the same within-op persist [[deleteMorMatched]] and
+    // [[updateMorImpl]] use; the first write below materializes it.
     val changes = changesPlan.persist()
     try {
-      val kept = visibleCount() - updated
+      val kept = visibleCount() - counts.updated - counts.deleted
       val ver  = nextVersion(s"$layer.$table")
       val dataCols = unioned.fields.toSeq.map(f => col(f.name))
-      // 1. tombstones for the updated rows' old positions
-      changes.filter(col(Upsert.ActionCol) === "update")
+      val action   = col(Upsert.ActionCol)
+      // 1. tombstones for the updated AND deleted rows' old positions
+      changes.filter(action.isin("update", "delete"))
         .select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
         .withColumn("_commit_part", lit(f"$ver%010d"))
         .write.mode(SaveMode.Append).partitionBy("_commit_part")
         .parquet(dvPath(layer, table).toString)
-      // 2. post-images + inserts land as new files (manifest rollback)
-      morLandFiles(layer, table, ver, changes.select(dataCols: _*))
-      // 3. feed: insert / update_preimage / update_postimage
-      val ins = changes.filter(col(Upsert.ActionCol) === "insert")
+      // 2. post-images + inserts land as new files (manifest rollback);
+      //    deletes land nothing — their tombstone IS the commit, so a
+      //    delete-only merge appends zero data files (like [[deleteMor]])
+      if (counts.inserted + counts.updated > 0)
+        morLandFiles(layer, table, ver,
+          changes.filter(action.isin("insert", "update")).select(dataCols: _*))
+      // 3. feed: insert / update_preimage / update_postimage / delete
+      val ins = changes.filter(action === "insert")
         .select(dataCols: _*).withColumn("_change_type", lit("insert"))
-      val preImg = changes.filter(col(Upsert.ActionCol) === "update")
-        .select(unioned.fields.toSeq.map(f => col(s"__pre_${f.name}").as(f.name)): _*)
-        .withColumn("_change_type", lit("update_preimage"))
-      val postImg = changes.filter(col(Upsert.ActionCol) === "update")
+      val preImg = changes.filter(action.isin("update", "delete"))
+        .select(unioned.fields.toSeq.map(f => col(s"__pre_${f.name}").as(f.name)) :+
+          when(action === "update", lit("update_preimage"))
+            .otherwise(lit("delete")).as("_change_type"): _*)
+      val postImg = changes.filter(action === "update")
         .select(dataCols: _*).withColumn("_change_type", lit("update_postimage"))
-      ins.unionByName(preImg).unionByName(postImg)
-        .withColumn("_commit_version", lit(ver))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(target + ".__changes")
-      logOp(layer, table, "MERGE_MOR", inserted = inserted, updated = updated,
-        outputRows = 0, version = ver)
+      appendFeed(layer, table, ver, ins.unionByName(preImg).unionByName(postImg))
+      // 4. ledger commit
+      logOp(layer, table, "MERGE_MOR", inserted = counts.inserted, updated = counts.updated,
+        outputRows = 0, version = ver, deleted = counts.deleted)
       primeSchemaCache(layer, table, unioned)
       primeFeedSchemaCache(layer, table, unioned)
-      Upsert.WriteMetrics(inserted = inserted, updated = updated, kept = kept)
+      counts.copy(kept = kept)
     } finally { changes.unpersist(); () }
   }
 
