@@ -7,12 +7,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-/** Job-count guard for every MERGE shape the warehouse runs: flat and
+/** Job-count guard for every DML shape the warehouse runs: flat and
   * partitioned upsert (with a cross-partition move), the zero-change
   * re-run, full-clause MERGE with a DELETE clause and with a BY SOURCE
-  * clause, and both merge-on-read entry points. Each shape pins three
-  * things: the Spark jobs its call starts may not exceed `maxJobs`
-  * (the count before the MERGE bodies were unified), and its ledger
+  * clause, both merge-on-read MERGE entry points, flat and partitioned
+  * DELETE (and a zero-match DELETE) and UPDATE, merge-on-read DELETE and
+  * UPDATE, REORG on both layouts, and incremental Z-order. Each shape
+  * pins three things: the Spark jobs its call starts may not exceed
+  * `maxJobs` (the count before the MERGE bodies, and later the
+  * DELETE/UPDATE/REORG/Z-order rewrites, were unified), and its ledger
   * row and change-feed rows equal the values recorded then.
   */
 class MergeJobsSpec extends SparkSpec {
@@ -190,5 +193,124 @@ class MergeJobsSpec extends SparkSpec {
     val ledger    = ledgerRow(wh, "t")
     check("mergeClausesMor", jobs, maxJobs = 14, ledger, ("MERGE_MOR", 1L, 1L, 1L, 0L),
       feedRows(wh, "t", ledger._2), deleteFeed)
+  }
+
+  /** Partitioned table over `pt` a/b/c (keys 1-10, 11-20, 21-30), with
+    * a second file in `a` (keys 31-35) so a rewrite of `a` carries one
+    * file as bytes.
+    */
+  private def partBase(wh: Warehouse): Unit = {
+    import spark.implicits._
+    wh.createOrReplacePartitioned("silver", "p",
+      (1L to 30L).map(k => (k, s"p$k", 0L, if (k <= 10) "a" else if (k <= 20) "b" else "c"))
+        .toDF("k", "payload", "ver", "pt").coalesce(1), Seq("pt"))
+    wh.append("silver", "p",
+      (31L to 35L).map(k => (k, s"p$k", 0L, "a")).toDF("k", "payload", "ver", "pt").coalesce(1))
+  }
+
+  test("flat delete, then a zero-match delete") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(wh.delete("silver", "t", col("k").isin(2L, 3L)))
+    assert(n == 2L)
+    val ledger = ledgerRow(wh, "t")
+    check("flat delete", jobs, maxJobs = 5, ledger, ("DELETE", 0L, 0L, 2L, 38L),
+      feedRows(wh, "t", ledger._2), Seq(("delete", 2L, "p2", 0L), ("delete", 3L, "p3", 0L)))
+    val (n0, jobs0) = countJobs(wh.delete("silver", "t", col("k") === 999L))
+    assert(n0 == 0L)
+    val ledger0 = ledgerRow(wh, "t")
+    check("zero-match delete", jobs0, maxJobs = 1, ledger0, ("DELETE", 0L, 0L, 0L, 0L),
+      feedRows(wh, "t", ledger0._2), Seq.empty)
+  }
+
+  test("partitioned delete") {
+    val wh = freshWh()
+    partBase(wh)
+    val (n, jobs) = countJobs(wh.delete("silver", "p", col("k") === 3L))
+    assert(n == 1L)
+    val ledger = ledgerRow(wh, "p")
+    check("partitioned delete", jobs, maxJobs = 9, ledger, ("DELETE", 0L, 0L, 1L, 14L),
+      feedRows(wh, "p", ledger._2), Seq(("delete", 3L, "p3", 0L)))
+  }
+
+  test("flat update") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(
+      wh.update("silver", "t", col("k") === 2L, Map("payload" -> lit("set2"))))
+    assert(n == 1L)
+    val ledger = ledgerRow(wh, "t")
+    check("flat update", jobs, maxJobs = 5, ledger, ("UPDATE", 0L, 1L, 0L, 40L),
+      feedRows(wh, "t", ledger._2),
+      Seq(("update_postimage", 2L, "set2", 0L), ("update_preimage", 2L, "p2", 0L)))
+  }
+
+  test("partitioned update") {
+    val wh = freshWh()
+    partBase(wh)
+    val (n, jobs) = countJobs(
+      wh.update("silver", "p", col("k") === 3L, Map("payload" -> lit("set3"))))
+    assert(n == 1L)
+    val ledger = ledgerRow(wh, "p")
+    check("partitioned update", jobs, maxJobs = 9, ledger, ("UPDATE", 0L, 1L, 0L, 15L),
+      feedRows(wh, "p", ledger._2),
+      Seq(("update_postimage", 3L, "set3", 0L), ("update_preimage", 3L, "p3", 0L)))
+  }
+
+  test("deleteMor and updateMor") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(wh.deleteMor("silver", "t", col("k") === 2L))
+    assert(n == 1L)
+    val ledger = ledgerRow(wh, "t")
+    check("deleteMor", jobs, maxJobs = 3, ledger, ("DELETE_MOR", 0L, 0L, 1L, 0L),
+      feedRows(wh, "t", ledger._2), Seq(("delete", 2L, "p2", 0L)))
+    val (nu, jobsU) = countJobs(
+      wh.updateMor("silver", "t", col("k") === 3L, Map("payload" -> lit("set3"))))
+    assert(nu == 1L)
+    val ledgerU = ledgerRow(wh, "t")
+    check("updateMor", jobsU, maxJobs = 13, ledgerU, ("UPDATE_MOR", 0L, 1L, 0L, 0L),
+      feedRows(wh, "t", ledgerU._2),
+      Seq(("update_postimage", 3L, "set3", 0L), ("update_preimage", 3L, "p3", 0L)))
+  }
+
+  test("flat reorg after a deleteMor") {
+    val wh = freshWh()
+    flatBase(wh)
+    wh.deleteMor("silver", "t", col("k") === 2L)
+    val (n, jobs) = countJobs(wh.reorg("silver", "t"))
+    assert(n == 1L, "one tombstoned file rewrites")
+    val ledger = ledgerRow(wh, "t")
+    check("flat reorg", jobs, maxJobs = 13, ledger, ("REORG", 0L, 0L, 0L, 39L),
+      feedRows(wh, "t", ledger._2), Seq.empty)
+    assert(wh.table("silver", "t").count() == 39L)
+  }
+
+  test("partitioned reorg after a deleteMor") {
+    val wh = freshWh()
+    partBase(wh)
+    wh.deleteMor("silver", "p", col("k") === 3L)
+    val (n, jobs) = countJobs(wh.reorg("silver", "p"))
+    assert(n == 1L, "one tombstoned file rewrites")
+    val ledger = ledgerRow(wh, "p")
+    check("partitioned reorg", jobs, maxJobs = 11, ledger, ("REORG", 0L, 0L, 0L, 14L),
+      feedRows(wh, "p", ledger._2), Seq.empty)
+    assert(wh.table("silver", "p").count() == 34L)
+  }
+
+  test("zorderIncremental with one victim and two carried files") {
+    import spark.implicits._
+    val wh = freshWh()
+    flatBase(wh)
+    // keys 1 and 40 span the whole range: the only wide file
+    wh.append("silver", "t",
+      Seq((1L, "w1", 0L), (40L, "w40", 0L)).toDF("k", "payload", "ver").coalesce(1))
+    val (n, jobs) = countJobs(wh.zorderIncremental("silver", "t", Seq("k")))
+    assert(n == 1L, "one victim file rewrites")
+    val ledger = ledgerRow(wh, "t")
+    // Z-order writes no change feed, and nothing before it did either
+    assert(!Files.exists(java.nio.file.Paths.get(wh.tablePath("silver", "t") + ".__changes")))
+    check("zorderIncremental", jobs, maxJobs = 5, ledger, ("ZORDER", 0L, 0L, 0L, 42L),
+      Seq.empty, Seq.empty)
   }
 }
