@@ -351,14 +351,19 @@ final class Warehouse(
 
   // ---- partition-scoped DML (Delta file-granular rewrite parity) ----
   //
-  // A partitioned table's upsert/update/delete rewrites ONLY the
-  // partition directories holding touched rows: one column-pruned pass
-  // finds the touched partitions (the "find touched files" scan Delta
-  // runs against its stats), the touched SLICE is rewritten to staging,
-  // and each touched directory stage-swaps individually. Untouched
-  // directories are never listed, read, or rewritten — a daily merge
-  // touching 0.1 % of a 100 TB table's run_dates costs O(touched
-  // partitions), not O(table). Pre-images retire into a SPARSE
+  // On a partitioned table every copy-on-write DML op — DELETE, UPDATE
+  // and REORG through [[rewriteFiles]], MERGE through [[mergeCow]] —
+  // rewrites ONLY the partition directories holding touched rows. One
+  // scope probe, an `input_file_name()` scan of the matching rows (the
+  // "find touched files" scan Delta runs against its stats), yields
+  // the touched files and their partition tuples together; REORG reads
+  // both off its tombstones' file keys instead. Only the touched files
+  // are decoded and rewritten, the other files of the touched
+  // directories byte-copy into staging, and each touched directory
+  // stage-swaps individually. Untouched directories are never listed,
+  // read, or rewritten — a daily merge touching 0.1 % of a 100 TB
+  // table's run_dates costs O(touched partitions), not O(table).
+  // Pre-images retire into a SPARSE
   // generation (marker `_GRAFT_SPARSE`) holding only the replaced
   // directories plus a `_GRAFT_CREATED` manifest of the directories the
   // op CREATED (no pre-image) — what lets [[repairCrashedSwap]] roll an
@@ -476,8 +481,9 @@ final class Warehouse(
 
   /** Normalize a raw directory-name value into the inferred type's
     * string form with Spark's own cast (driver-side literal eval — no
-    * job): `"05"` under an int-inferred column → `"5"`, matching what
-    * [[touchedPartitions]] reads back from the same directory.
+    * job): `"05"` under an int-inferred column → `"5"`, matching what a
+    * string-cast scope probe ([[touchedPartitions]], the DML scope
+    * probes) reads back from the same directory.
     */
   private[sources] def normalizePartitionValue(
       raw: String,
@@ -508,16 +514,37 @@ final class Warehouse(
       schema: org.apache.spark.sql.types.StructType,
       touched: Seq[Seq[String]]
   ): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val ptypes     = pcols.map(c => schema(c).dataType)
     val touchedSet = touched.map(_.toList).toSet
-    leafPartitionDirs(target, pcols.length).filter { rel =>
-      val parsed = rel.split("/").toList.zip(ptypes).map { case (seg, t) =>
-        val raw = ExternalCatalogUtils.unescapePathName(seg.split("=", 2)(1))
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else normalizePartitionValue(raw, t)
-      }
-      touchedSet.contains(parsed)
+    leafPartitionDirs(target, pcols.length)
+      .filter(rel => touchedSet.contains(parsePartitionDir(rel.split("/").toSeq, ptypes)))
+  }
+
+  /** The partition tuple of a data file of the live table (decoded
+    * domain): its leaf directory, parsed as [[retireDirsFor]] parses
+    * one. Empty on a flat table.
+    */
+  private[sources] def partitionTupleOf(
+      file: String,
+      pcols: Seq[String],
+      schema: StructType
+  ): Seq[String] =
+    parsePartitionDir(
+      new Path(file).toUri.getPath.split('/').toSeq.dropRight(1).takeRight(pcols.length),
+      pcols.map(c => schema(c).dataType))
+
+  /** On-disk `col=value` directory segments → their values in the
+    * inferred-type string domain (null for the hive default partition).
+    */
+  private def parsePartitionDir(
+      segments: Seq[String],
+      ptypes: Seq[org.apache.spark.sql.types.DataType]
+  ): List[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    segments.toList.zip(ptypes).map { case (seg, t) =>
+      val raw = ExternalCatalogUtils.unescapePathName(seg.split("=", 2)(1))
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else normalizePartitionValue(raw, t)
     }
   }
 
@@ -1005,15 +1032,6 @@ final class Warehouse(
   private[sources] def normDataFile(s: String): String =
     try new Path(new java.net.URI(s)).toString
     catch { case _: java.net.URISyntaxException => new Path(s).toString }
-
-  /** File-granular copy-on-write support: the set of data files that
-    * contain at least one predicate-matching row, from one
-    * pushed-predicate scan (`input_file_name()` is evaluated at the
-    * scan, before any shuffle, so it is exact). Decoded-domain paths.
-    */
-  private[sources] def touchedFiles(df: DataFrame, hit: Column): Set[String] =
-    df.filter(hit).select(input_file_name().as("f")).distinct()
-      .collect().map(r => normDataFile(r.getString(0))).toSet
 
   /** Byte-copy files into `staging` on the EXECUTORS — a distributed
     * server-side copy with zero decode/shuffle/encode, the cheap half

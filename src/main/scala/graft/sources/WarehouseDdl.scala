@@ -94,8 +94,7 @@ private[sources] trait WarehouseDdl { self: Warehouse =>
             val filled = rawTable(layer, table).withColumn(colName,
               lit(startWith) + lit(step) * monotonically_increasing_id())
             val pcols = partitionColumns(layer, table)
-            if (pcols.nonEmpty) createOrReplacePartitionedImpl(layer, table, filled, pcols)
-            else createOrReplaceImpl(layer, table, filled)
+            createOrReplaceImpl(layer, table, filled, pcols)
             val mx = rawTable(layer, table).agg(max(col(colName))).head()
             if (mx.isNullAt(0)) base else mx.getLong(0)
           }

@@ -6,13 +6,14 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Copy-on-write DML: CTAS (whole-table and partitioned), DELETE and
-  * UPDATE in whole-table and partition-scoped forms, APPEND, and MERGE
-  * — the shared MERGE front end, the one copy-on-write MERGE body
-  * behind [[upsert]] and [[mergeClauses]], and the change-feed writer
-  * every DML body commits through. The members self-type on
-  * [[Warehouse]] and share its package-private core (locks, staged
-  * swap, ledger).
+/** Copy-on-write DML: CTAS, APPEND, DELETE, UPDATE and MERGE. DELETE,
+  * UPDATE, REORG and incremental Z-order rewrite through one
+  * file-granular body, [[rewriteFiles]]; MERGE has its own front end
+  * and copy-on-write body ([[mergeCow]]), which also decides which
+  * action every row takes. Every body commits its change rows through
+  * [[appendFeed]]. A flat table is the no-partition-columns case of
+  * each body. The members self-type on [[Warehouse]] and share its
+  * package-private core (locks, staged swap, ledger).
   */
 private[sources] trait WarehouseDml { self: Warehouse =>
 
@@ -35,132 +36,131 @@ private[sources] trait WarehouseDml { self: Warehouse =>
   private def clusterStaged(df: DataFrame, pcols: Seq[String], touched: Int): DataFrame =
     df.repartition(math.max(touched, 1), pcols.map(col): _*)
 
-  /** Partition-scoped DELETE — see the section comment above. Returns
-    * the deleted-row count; a predicate matching nothing skips the
-    * rewrite/feed/generation but still logs a `DELETE 0` ledger commit
-    * with a version bump (Delta records a DELETE commit even at zero
-    * matched rows — the one no-op convention across all six DML entry
-    * points; a version with no generation folds into its predecessor
-    * on time travel, like APPEND). Ledger `num_output_rows` records
-    * the rows REWRITTEN (the touched slice's survivors), not the table.
+  /** The file-granular copy-on-write rewrite (Delta's
+    * rewrite-touched-files-only, in the snapshot-dir model) that
+    * DELETE, UPDATE, REORG and incremental Z-order share. `files` are
+    * the touched data files of `read` (the table's merged read,
+    * decoded domain); on a partitioned table `parts` are their
+    * partition tuples in the inferred-type string domain. The touched
+    * files are decoded, passed through `rewrite` and staged; every
+    * other file of the scope byte-copies into the staged generation
+    * without decoding. `beforeSwap` runs on the touched rows and the
+    * rewritten-row count once the generation is staged and before it
+    * goes live — the place for the feed write and for checks that must
+    * refuse the commit. Returns its result and the new generation's
+    * row count within the scope (rewritten rows observed from the
+    * write job, carried rows from parquet footers). The layout decides
+    * three things only:
+    *
+    *   - the scope: the whole table, or the live leaf directories of
+    *     `parts` ([[retireDirsFor]], so every on-disk spelling of a
+    *     touched value is found);
+    *   - clustering the staged rewrite on the partition columns
+    *     ([[clusterStaged]]);
+    *   - the swap: the whole table, or only the scope's directories.
     */
-  private[sources] def deletePartitioned(
+  private[sources] def rewriteFiles[A](
       layer: String,
       table: String,
-      predicate: Column,
-      pcols: Seq[String]
-  ): Long = {
+      read: DataFrame,
+      pcols: Seq[String],
+      files: Set[String],
+      parts: Seq[Seq[String]],
+      rewrite: DataFrame => DataFrame
+  )(beforeSwap: (DataFrame, Long) => A): (A, Long) = {
     val target = tablePath(layer, table)
-    val df     = mergedRead(layer, table)
-    val hit    = coalesce(predicate, lit(false))
-    val touched = touchedPartitions(df.filter(hit), pcols)
-    if (touched.isEmpty) {
-      logOp(layer, table, "DELETE", inserted = 0, updated = 0, outputRows = 0)
-      return 0L
-    }
-    val ver     = nextVersion(s"$layer.$table")
-    val slice   = pruneToTouched(df, touched, pcols)
+    val (retireDirs, carry) =
+      if (pcols.isEmpty)
+        (Seq.empty[String], read.inputFiles.map(normDataFile).filterNot(files).toSeq.map((_, "")))
+      else {
+        val rd = retireDirsFor(new Path(target), pcols, read.schema, parts)
+        (rd, dataFilesUnder(new Path(target), rd).filterNot(p => files.contains(p._1)))
+      }
     val staging = new Path(target + ".__staging")
     fs.delete(staging, true)
-    // file-granular COW *within* the touched partitions, compounding
-    // the partition scoping: only files that contain matched rows are
-    // decoded and rewritten; the other files of the touched dirs
-    // byte-copy into the staged leaf dirs (untouched partitions were
-    // never in scope at all). basePath keeps the hive partition
-    // columns inferable on the touched-file read.
-    val retireDirs = retireDirsFor(new Path(target), pcols, df.schema, touched)
-    val touchedF   = touchedFiles(slice, hit)
-    val carryPairs = dataFilesUnder(new Path(target), retireDirs)
-      .filterNot(p => touchedF.contains(p._1))
-    val touchedDf = readFilesAligned(touchedF.toSeq, df.schema, basePath = Some(target))
-    val keptObs = org.apache.spark.sql.Observation()
-    clusterStaged(touchedDf.filter(!hit), pcols, touched.length)
-      .observe(keptObs, count(lit(1)).as("n"))
+    val touched = readFilesAligned(files.toSeq, read.schema, basePath = Some(target))
+    val rows    = rewrite(touched)
+    val obs     = org.apache.spark.sql.Observation()
+    (if (pcols.isEmpty) rows else clusterStaged(rows, pcols, parts.length))
+      .observe(obs, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(staging.toString)
-    copyFilesInto(carryPairs, staging)
-    val keptRewritten = keptObs.get("n").asInstanceOf[Long]
-    val keptCarried =
-      if (carryPairs.isEmpty) 0L
-      else footerRowCount(carryPairs.map(_._1), Some(target))
-    val deleted =
-      appendFeed(layer, table, ver, touchedDf.filter(hit).withColumn("_change_type", lit("delete")))
-    swapPartitions(layer, table, staging, retireDirs, pcols.length)
-    logOp(layer, table, "DELETE", inserted = 0, updated = 0,
-      outputRows = keptRewritten + keptCarried, version = ver, deleted = deleted)
-    primeFeedSchemaCache(layer, table, df.schema)
-    deleted
+    copyFilesInto(carry, staging)
+    val rewritten = obs.get("n").asInstanceOf[Long]
+    // footer-only count BEFORE the feed write keeps the feed-to-ledger
+    // commit window minimal (see [[mergeCow]])
+    val carried = footerRowCount(carry.map(_._1), Some(target))
+    val result  = beforeSwap(touched, rewritten)
+    if (pcols.isEmpty) retireAndSwap(layer, table, staging)
+    else swapPartitions(layer, table, staging, retireDirs, pcols.length)
+    (result, rewritten + carried)
   }
 
-  /** Partition-scoped UPDATE. Partition-column assignments are refused:
-    * they would move rows across directories, which is MERGE semantics
-    * ([[upsert]] handles moves correctly via its matched-key partition
-    * set). Returns the updated-row count; zero matches skips the
-    * rewrite but logs an `UPDATE 0` commit (the unified no-op
-    * convention — see [[deletePartitioned]]).
+  /** The scope probe of a predicate DML op: ONE pushed-predicate
+    * `input_file_name()` scan of the rows `hit` selects yields the
+    * touched files and, on a partitioned table, their partition tuples
+    * (string-cast from the inferred partition types — the domain
+    * [[retireDirsFor]] matches in, so `day=05` and `x=1.50` spellings
+    * still retire). `input_file_name()` is evaluated at the scan,
+    * before any shuffle, so it is exact. Both empty when nothing
+    * matches.
     */
-  private[sources] def updatePartitioned(
-      layer: String,
-      table: String,
-      predicate: Column,
-      assignments: Map[String, Column],
+  private def hitScope(
+      df: DataFrame,
+      hit: Column,
       pcols: Seq[String]
-  ): Long = {
-    require(
-      !assignments.keys.exists(pcols.contains),
-      s"partition-scoped UPDATE cannot assign partition columns (${pcols.mkString(",")}): " +
-        "rows would move between partitions — use upsert (MERGE) instead")
-    val target = tablePath(layer, table)
-    val df     = mergedRead(layer, table)
-    assignments.keys.foreach(c =>
-      require(df.columns.contains(c), s"UPDATE assigns unknown column $c"))
-    val hit     = coalesce(predicate, lit(false))
-    val touched = touchedPartitions(df.filter(hit), pcols)
-    if (touched.isEmpty) {
-      logOp(layer, table, "UPDATE", inserted = 0, updated = 0, outputRows = 0)
-      return 0L
-    }
-    val ver     = nextVersion(s"$layer.$table")
-    val slice   = pruneToTouched(df, touched, pcols)
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    // file-granular COW within the touched partitions (see
-    // [[deletePartitioned]]): decode only the files holding matched
-    // rows, byte-copy the rest of the touched dirs
-    val retireDirs = retireDirsFor(new Path(target), pcols, df.schema, touched)
-    val touchedF   = touchedFiles(slice, hit)
-    val carryPairs = dataFilesUnder(new Path(target), retireDirs)
-      .filterNot(p => touchedF.contains(p._1))
-    val touchedDf = readFilesAligned(touchedF.toSeq, df.schema, basePath = Some(target))
-    val rewritten = touchedDf.select(df.schema.fields.toSeq.map { f =>
+  ): (Set[String], Seq[Seq[String]]) = {
+    val rows = df.filter(hit)
+      .select((pcols.map(c => col(c).cast("string")) :+ input_file_name()): _*)
+      .distinct().collect()
+    (rows.map(r => normDataFile(r.getString(pcols.length))).toSet,
+      rows.map(r => pcols.indices.map(r.getString).toSeq).toSeq.distinct)
+  }
+
+  /** `df` with `assignments` applied to the rows `hit` selects, each
+    * value cast to its column's existing type — an UPDATE never changes
+    * the schema. Assignments evaluate against the pre-update row (one
+    * projection, SQL UPDATE semantics).
+    */
+  private[sources] def applyAssignments(
+      df: DataFrame,
+      assignments: Map[String, Column],
+      hit: Column = lit(true)
+  ): DataFrame =
+    df.select(df.schema.fields.toSeq.map { f =>
       assignments.get(f.name) match {
         case Some(a) => when(hit, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
         case None    => col(f.name)
       }
     }: _*)
-    val rowsObs = org.apache.spark.sql.Observation()
-    clusterStaged(rewritten, pcols, touched.length)
-      .observe(rowsObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(staging.toString)
-    copyFilesInto(carryPairs, staging)
-    val rewrittenRows = rowsObs.get("n").asInstanceOf[Long]
-    val carriedRows =
-      if (carryPairs.isEmpty) 0L
-      else footerRowCount(carryPairs.map(_._1), Some(target))
-    val pre = touchedDf.filter(hit).withColumn("_change_type", lit("update_preimage"))
-    val post = touchedDf.filter(hit)
-      .select(df.schema.fields.toSeq.map { f =>
-        assignments.get(f.name) match {
-          case Some(a) => a.cast(f.dataType).as(f.name)
-          case None    => col(f.name)
-        }
-      }: _*)
-      .withColumn("_change_type", lit("update_postimage"))
-    val updated = appendFeed(layer, table, ver, pre.unionByName(post)) / 2
-    swapPartitions(layer, table, staging, retireDirs, pcols.length)
-    logOp(layer, table, "UPDATE", inserted = 0, updated = updated,
-      outputRows = rewrittenRows + carriedRows, version = ver)
-    primeFeedSchemaCache(layer, table, df.schema)
-    updated
+
+  /** The checks both UPDATE paths ([[update]], [[updateMor]]) run on
+    * their assignments: real columns only, never an identity column
+    * (its values are engine-owned), never a generated column nor one
+    * it derives from — assignments evaluate against PRE-update rows,
+    * so an inline recompute would read stale sources; rewrite via
+    * createOrReplace to change a derivation.
+    */
+  private[sources] def checkUpdateAssignments(
+      layer: String,
+      table: String,
+      assignments: Map[String, Column],
+      columns: Seq[String]
+  ): Unit = {
+    identityColumns(layer, table).foreach { case (c, _, _) =>
+      require(!assignments.keys.exists(_.equalsIgnoreCase(c)),
+        s"cannot UPDATE identity column $c (GENERATED ALWAYS AS IDENTITY)")
+    }
+    val keys = assignments.keySet.map(_.toLowerCase)
+    generatedColumns(layer, table).foreach { case (c, e) =>
+      require(!keys.contains(c.toLowerCase),
+        s"cannot UPDATE generated column $c (GENERATED ALWAYS AS $e)")
+      val overlap = exprDeps(e).intersect(keys)
+      require(overlap.isEmpty,
+        s"UPDATE assigns ${overlap.mkString(", ")}, which generated column " +
+          s"$c derives from — rewrite via createOrReplace to keep $c consistent")
+    }
+    assignments.keys.foreach(c =>
+      require(columns.contains(c), s"UPDATE assigns unknown column $c"))
   }
 
   /** CREATE OR REPLACE TABLE AS SELECT (reference bronze_arxiv.py:102).
@@ -171,7 +171,26 @@ private[sources] trait WarehouseDml { self: Warehouse =>
   def createOrReplace(layer: String, table: String, df: DataFrame): Long =
     withWriterLock(layer, table)(createOrReplaceImpl(layer, table, df))
 
-  private[sources] def createOrReplaceImpl(layer: String, table: String, df0: DataFrame): Long = {
+  /** CTAS partitioned by the given columns (hive-style directories).
+    * Partitioning silver/gold by run_date gives dynamic partition
+    * pruning on date-filtered reads for free (SURVEY §4) — the scan
+    * shows PartitionFilters instead of reading every file.
+    */
+  def createOrReplacePartitioned(
+      layer: String,
+      table: String,
+      df: DataFrame,
+      partitionCols: Seq[String]
+  ): Long =
+    withWriterLock(layer, table)(createOrReplaceImpl(layer, table, df, partitionCols))
+
+  /** The one CTAS body, flat (no `partitionCols`) or hive-partitioned. */
+  private[sources] def createOrReplaceImpl(
+      layer: String,
+      table: String,
+      df0: DataFrame,
+      partitionCols: Seq[String] = Seq.empty
+  ): Long = {
     repairCrashedSwap(layer, table)
     val gen = applyGenerated(layer, table, df0, "CREATE OR REPLACE")
     // a REPLACE may legitimately carry the identity column (it is a
@@ -187,66 +206,34 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     // [[append]])
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val rows = obs.get("n").asInstanceOf[Long]
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "CREATE OR REPLACE", inserted = rows, updated = 0, outputRows = rows)
-    primeSchemaCache(layer, table, df.schema)
-    rows
-  }
-
-  /** CTAS partitioned by the given columns (hive-style directories).
-    * Partitioning silver/gold by run_date gives dynamic partition
-    * pruning on date-filtered reads for free (SURVEY §4) — the scan
-    * shows PartitionFilters instead of reading every file.
-    */
-  def createOrReplacePartitioned(
-      layer: String,
-      table: String,
-      df: DataFrame,
-      partitionCols: Seq[String]
-  ): Long =
-    withWriterLock(layer, table)(
-      createOrReplacePartitionedImpl(layer, table, df, partitionCols))
-
-  private[sources] def createOrReplacePartitionedImpl(
-      layer: String,
-      table: String,
-      df0: DataFrame,
-      partitionCols: Seq[String]
-  ): Long = {
-    repairCrashedSwap(layer, table)
-    val gen = applyGenerated(layer, table, df0, "CREATE OR REPLACE")
-    // identity hook, exactly like the unpartitioned CTAS (carry allowed
-    // on a redefinition; omitted columns assigned; high water advanced)
-    val (df, idHighs) = applyIdentity(layer, table, gen, allowCarry = true)
-    commitIdentity(layer, table, idHighs)
-    enforceConstraints(layer, table, df, "CREATE OR REPLACE")
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(staging.toString)
     val rows = obs.get("n").asInstanceOf[Long]
     retireAndSwap(layer, table, staging)
     logOp(layer, table, "CREATE OR REPLACE", inserted = rows, updated = 0, outputRows = rows)
+    primeSchemaCache(layer, table, df.schema) // a partitioned table keeps inference
     rows
   }
 
-
   /** DELETE FROM ... WHERE (Delta parity — and the right-to-be-
     *-forgotten primitive a training-data warehouse is legally required
-    * to have): file-granular copy-on-write through the same staged
-    * swap as every other write — only files containing matched rows
-    * are decoded and rewritten, the rest byte-copy into the new
-    * generation (Delta's rewrite-touched-files-only, expressed in the
-    * snapshot-dir model) — so the pre-delete generation stays
-    * [[tableAsOf]]-readable until pruned and a crash never loses the
-    * table. Deleted rows are recorded in the change feed as
-    * `_change_type = 'delete'` (Delta CDF does the same) — a
-    * downstream consumer must SEE deletions to forget the rows too;
-    * a feed that only carries upserts silently re-leaks deleted data
-    * from derived tables. Returns the deleted-row count.
+    * to have): file-granular copy-on-write through [[rewriteFiles]] —
+    * only files containing matched rows are decoded and rewritten, the
+    * rest of the scope byte-copies into the new generation, and on a
+    * partitioned table only the directories holding matched rows swap
+    * — so the pre-delete generation stays [[tableAsOf]]-readable until
+    * pruned and a crash never loses the table. Deleted rows are
+    * recorded in the change feed as `_change_type = 'delete'` (Delta
+    * CDF does the same) — a downstream consumer must SEE deletions to
+    * forget the rows too; a feed that only carries upserts silently
+    * re-leaks deleted data from derived tables. A predicate matching
+    * nothing skips the rewrite, feed and generation but still logs a
+    * `DELETE 0` ledger commit with a version bump (Delta records a
+    * DELETE commit even at zero matched rows — the one no-op convention
+    * across every DML entry point; a version with no generation folds
+    * into its predecessor on time travel, like APPEND). Ledger
+    * `num_output_rows` counts the rows of the rewritten scope — the
+    * whole table, or the touched partitions. Returns the deleted-row
+    * count.
     */
   def delete(layer: String, table: String, predicate: Column): Long =
     withWriterLock(layer, table)(deleteImpl(layer, table, predicate))
@@ -255,63 +242,40 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     repairCrashedSwap(layer, table)
     materializeDv(layer, table) // rewrite never runs against live tombstones
     val pcols = partitionColumns(layer, table)
-    if (pcols.nonEmpty) return deletePartitioned(layer, table, predicate, pcols)
-    val target  = tablePath(layer, table)
-    val df      = mergedRead(layer, table)
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
+    val df    = mergedRead(layer, table)
     // NULL predicate keeps the row (Delta DELETE semantics): a bare
     // !predicate would silently drop NULL-evaluating rows from BOTH
     // the survivors and the feed — rows vanishing unrecorded
-    val hit = coalesce(predicate, lit(false))
-    // File-granular copy-on-write (Delta's rewrite-touched-files-only,
-    // in the snapshot-dir model): one pushed-predicate scan finds the
-    // files that contain matching rows — it doubles as the zero-match
-    // existence probe. Only those files are decoded and rewritten;
-    // every other file is byte-copied into the staging generation on
-    // the executors (no decode, no shuffle). With a clustered layout
-    // (z-order + a selective predicate) a 100 TB DELETE rewrites the
-    // touched percent and streams the rest — against a table whose
-    // predicate spans every file this degenerates to exactly the old
-    // full rewrite, copies included... minus none (touched = all).
-    val touched = touchedFiles(df, hit)
-    if (touched.isEmpty) {
-      // zero-match no-op: a `DELETE 0` ledger commit with a version
-      // bump, no rewrite, no feed rows (unified no-op convention)
+    val hit            = coalesce(predicate, lit(false))
+    val (files, parts) = hitScope(df, hit, pcols)
+    if (files.isEmpty) {
       logOp(layer, table, "DELETE", inserted = 0, updated = 0, outputRows = 0)
       return 0L
     }
-    val untouched = df.inputFiles.map(normDataFile).filterNot(touched).toSeq
-    val touchedDf = readFilesAligned(touched.toSeq, df.schema)
-    val keptObs = org.apache.spark.sql.Observation()
-    touchedDf.filter(!hit).observe(keptObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    copyFilesInto(untouched.map((_, "")), staging)
-    val keptRewritten = keptObs.get("n").asInstanceOf[Long]
-    // untouched rows never decode: their count comes from parquet
-    // footer metadata (a zero-column scan), not a data read
-    val keptCarried =
-      if (untouched.isEmpty) 0L
-      else footerRowCount(untouched)
-    val deleted =
-      appendFeed(layer, table, ver, touchedDf.filter(hit).withColumn("_change_type", lit("delete")))
-    retireAndSwap(layer, table, staging)
+    val ver = nextVersion(s"$layer.$table")
+    val (deleted, outputRows) = rewriteFiles(layer, table, df, pcols, files, parts, _.filter(!hit)) {
+      (touched, _) =>
+        appendFeed(layer, table, ver, touched.filter(hit).withColumn("_change_type", lit("delete")))
+    }
     logOp(layer, table, "DELETE", inserted = 0, updated = 0,
-      outputRows = keptRewritten + keptCarried, version = ver, deleted = deleted)
+      outputRows = outputRows, version = ver, deleted = deleted)
     primeSchemaCache(layer, table, df.schema)
     primeFeedSchemaCache(layer, table, df.schema)
     deleted
   }
 
   /** UPDATE ... SET ... WHERE (the last of the Delta DML triad next to
-    * MERGE and DELETE): staged rewrite applying `assignments` to the
+    * MERGE and DELETE): [[rewriteFiles]] applying `assignments` to the
     * predicate's rows — NULL predicate keeps the row unchanged, like
-    * DELETE. Both change-feed images are recorded (update_preimage /
-    * update_postimage), so downstream incremental consumers subtract
-    * the old row and add the new one. Assignments are cast to the
-    * column's existing type — an UPDATE never changes the schema.
-    * Returns the updated-row count.
+    * DELETE, and zero matches log an `UPDATE 0` commit (the no-op
+    * convention of [[delete]]). Both change-feed images are recorded
+    * (update_preimage / update_postimage), so downstream incremental
+    * consumers subtract the old row and add the new one. Assignments
+    * are cast to the column's existing type — an UPDATE never changes
+    * the schema. On a partitioned table, partition-column assignments
+    * are refused: they would move rows across directories, which is
+    * MERGE semantics ([[upsert]] moves rows correctly through its
+    * matched-key partition set). Returns the updated-row count.
     */
   def update(
       layer: String,
@@ -329,87 +293,39 @@ private[sources] trait WarehouseDml { self: Warehouse =>
   ): Long = {
     repairCrashedSwap(layer, table)
     materializeDv(layer, table) // rewrite never runs against live tombstones
-    identityColumns(layer, table).foreach { case (c, _, _) =>
-      require(!assignments.keys.exists(_.equalsIgnoreCase(c)),
-        s"cannot UPDATE identity column $c (GENERATED ALWAYS AS IDENTITY)")
-    }
-    val gens = generatedColumns(layer, table)
-    if (gens.nonEmpty) {
-      // assignments evaluate against PRE-update rows (one projection,
-      // SQL UPDATE semantics) — an inline generated-column recompute
-      // would read stale sources, so derivation-touching updates are
-      // refused; rewrite via createOrReplace to change a derivation
-      val keys = assignments.keySet.map(_.toLowerCase)
-      gens.foreach { case (c, e) =>
-        require(!keys.contains(c.toLowerCase),
-          s"cannot UPDATE generated column $c (GENERATED ALWAYS AS $e)")
-        val overlap = exprDeps(e).intersect(keys)
-        require(overlap.isEmpty,
-          s"UPDATE assigns ${overlap.mkString(", ")}, which generated column " +
-            s"$c derives from — rewrite via createOrReplace to keep $c consistent")
-      }
-    }
-    if (constraints(layer, table).nonEmpty) {
-      // post-images of the matched slice — the only new row images an
-      // UPDATE introduces; checked before either rewrite path stages
-      val base = mergedRead(layer, table)
-      val post = assignments.foldLeft(base.filter(coalesce(predicate, lit(false)))) {
-        case (d, (c, v)) => d.withColumn(c, v.cast(base.schema(c).dataType))
-      }
-      enforceConstraints(layer, table, post, "UPDATE")
-    }
-    val pcols = partitionColumns(layer, table)
-    if (pcols.nonEmpty) return updatePartitioned(layer, table, predicate, assignments, pcols)
-    val target = tablePath(layer, table)
-    val df     = mergedRead(layer, table)
-    assignments.keys.foreach(c =>
-      require(df.columns.contains(c), s"UPDATE assigns unknown column $c"))
+    val df  = mergedRead(layer, table)
+    checkUpdateAssignments(layer, table, assignments, df.columns.toSeq)
     val hit = coalesce(predicate, lit(false))
-    // file-granular COW, exactly like DELETE: the touched-file probe is
-    // the zero-match existence probe, untouched files byte-copy into
-    // the staging generation without ever decoding
-    val touched = touchedFiles(df, hit)
-    if (touched.isEmpty) {
+    // post-images of the matched slice — the only new row images an
+    // UPDATE introduces; checked before anything stages
+    if (constraints(layer, table).nonEmpty)
+      enforceConstraints(layer, table, applyAssignments(df.filter(hit), assignments), "UPDATE")
+    val pcols = partitionColumns(layer, table)
+    require(
+      !assignments.keys.exists(pcols.contains),
+      s"partition-scoped UPDATE cannot assign partition columns (${pcols.mkString(",")}): " +
+        "rows would move between partitions — use upsert (MERGE) instead")
+    val (files, parts) = hitScope(df, hit, pcols)
+    if (files.isEmpty) {
       logOp(layer, table, "UPDATE", inserted = 0, updated = 0, outputRows = 0)
       return 0L
     }
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
     val ver = nextVersion(s"$layer.$table")
-    val untouched = df.inputFiles.map(normDataFile).filterNot(touched).toSeq
-    val touchedDf = readFilesAligned(touched.toSeq, df.schema)
-    val rewritten = touchedDf.select(df.schema.fields.toSeq.map { f =>
-      assignments.get(f.name) match {
-        case Some(a) => when(hit, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None    => col(f.name)
+    val (updated, outputRows) =
+      rewriteFiles(layer, table, df, pcols, files, parts, applyAssignments(_, assignments, hit)) {
+        (touched, _) =>
+          val pre  = touched.filter(hit)
+          val post = applyAssignments(pre, assignments)
+          appendFeed(layer, table, ver,
+            pre.withColumn("_change_type", lit("update_preimage"))
+              .unionByName(post.withColumn("_change_type", lit("update_postimage")))) / 2
       }
-    }: _*)
-    val rowsObs = org.apache.spark.sql.Observation()
-    rewritten.observe(rowsObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    copyFilesInto(untouched.map((_, "")), staging)
-    val rewrittenRows = rowsObs.get("n").asInstanceOf[Long]
-    val carriedRows =
-      if (untouched.isEmpty) 0L
-      else footerRowCount(untouched)
-    val pre = touchedDf.filter(hit).withColumn("_change_type", lit("update_preimage"))
-    val post = touchedDf.filter(hit)
-      .select(df.schema.fields.toSeq.map { f =>
-        assignments.get(f.name) match {
-          case Some(a) => a.cast(f.dataType).as(f.name)
-          case None    => col(f.name)
-        }
-      }: _*)
-      .withColumn("_change_type", lit("update_postimage"))
-    val updated = appendFeed(layer, table, ver, pre.unionByName(post)) / 2
-    retireAndSwap(layer, table, staging)
     logOp(layer, table, "UPDATE", inserted = 0, updated = updated,
-      outputRows = rewrittenRows + carriedRows, version = ver)
+      outputRows = outputRows, version = ver)
     primeSchemaCache(layer, table, df.schema)
     primeFeedSchemaCache(layer, table, df.schema)
     updated
   }
-
 
   /** Shared validation for the full-clause MERGE paths: explicit SET /
     * INSERT assignments must name real columns, never identity columns
@@ -641,9 +557,11 @@ private[sources] trait WarehouseDml { self: Warehouse =>
           // touched empty ⟺ the source has zero rows. Documented
           // divergence: a ZERO-ROW source carrying a new column does not
           // evolve the schema here (Delta would update metadata); with
-          // no rows there is no slice to rewrite the column into
+          // no rows there is no slice to rewrite the column into. Every
+          // row is kept, footer-counted as a flat table's carried files are
           logOp(layer, table, "MERGE", inserted = 0, updated = 0, outputRows = 0)
-          return Upsert.MergeClauseMetrics(0, 0, 0, 0)
+          return Upsert.MergeClauseMetrics(0, 0, 0,
+            footerRowCount(tgt0.inputFiles.map(normDataFile).toSeq, Some(target)))
         }
         val rd    = retireDirsFor(new Path(target), pcols, tgt0.schema, touched)
         val slice = dataFilesUnder(new Path(target), rd)

@@ -354,7 +354,6 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
       zorderImpl(layer, table, cols, targetRowsPerFile, bits)
       return spark.read.parquet(tablePath(layer, table)).inputFiles.length.toLong
     }
-    val target  = tablePath(layer, table)
     val df      = mergedRead(layer, table)
     val numCols = cols.filter(zIsNumeric(df, _))
     require(numCols.nonEmpty,
@@ -384,28 +383,17 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
       return 0L
     }
     val victimFiles = victims.map(r => normDataFile(r.getAs[String]("__f"))).toSet
-    val untouched   = df.inputFiles.map(normDataFile).filterNot(victimFiles).toSeq
     val victimRows  = victims.map(_.getAs[Long]("__rows")).sum
     val nFiles = math.max(1L, (victimRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
     val z = zExpr(df, cols, bits, stats)
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val obs = org.apache.spark.sql.Observation()
-    readFilesAligned(victimFiles.toSeq, df.schema)
-      .withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    copyFilesInto(untouched.map((_, "")), staging)
-    val back = obs.get("n").asInstanceOf[Long]
-    require(back == victimRows, s"zorder changed row count: $victimRows -> $back")
-    val carried =
-      if (untouched.isEmpty) 0L else footerRowCount(untouched)
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "ZORDER", inserted = 0, updated = 0,
-      outputRows = back + carried)
+    val (_, outputRows) = rewriteFiles(layer, table, df, Seq.empty, victimFiles, Seq.empty,
+      _.withColumn("__z", z)
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")) { (_, back) =>
+      require(back == victimRows, s"zorder changed row count: $victimRows -> $back")
+    }
+    logOp(layer, table, "ZORDER", inserted = 0, updated = 0, outputRows = outputRows)
     victimFiles.size.toLong
   }
 
@@ -785,9 +773,7 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
         else {
           val pcols = partitionColumns(layer, table)
           val filled = live.withColumn(colName, expr(sqlExpr))
-          if (pcols.nonEmpty)
-            createOrReplacePartitionedImpl(layer, table, filled, pcols)
-          else createOrReplaceImpl(layer, table, filled)
+          createOrReplaceImpl(layer, table, filled, pcols)
         }
       }
       writeGeneratedSidecar(layer, table, existing :+ ((colName, sqlExpr)))

@@ -169,6 +169,37 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       col("__dv_f") === col("__dv_file") && col("__dv_p") === col("__dv_pos"),
       "left_anti")
 
+  /** The live rows of `raw` (this table's merged read) that no
+    * current tombstone hides, carrying their positions as
+    * `__dv_f`/`__dv_p` — the read every merge-on-read op classifies
+    * against — together with the tombstones applied (None when none
+    * are live).
+    */
+  private def visibleWithPositions(
+      layer: String,
+      table: String,
+      raw: DataFrame
+  ): (DataFrame, Option[DataFrame]) = {
+    val withMeta   = withDvMeta(raw, partitionColumns(layer, table).length)
+    val tombstones = dvRowsFor(layer, table, Long.MaxValue)
+    (tombstones.fold(withMeta)(dvAntiJoin(withMeta, _)), tombstones)
+  }
+
+  /** Append one commit's tombstones — the `__dv_f`/`__dv_p` positions
+    * of `rows` — to the `.__dv` sidecar, in the commit version's
+    * partition. Returns the number of positions written, observed from
+    * the write job.
+    */
+  private def appendTombstones(layer: String, table: String, ver: Long, rows: DataFrame): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    rows.select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
+      .withColumn("_commit_part", lit(f"$ver%010d"))
+      .observe(obs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Append).partitionBy("_commit_part")
+      .parquet(dvPath(layer, table).toString)
+    obs.get("n").asInstanceOf[Long]
+  }
+
   /** DV file key: the trailing `depth + 1` path segments of the file —
     * `pt=a/part-XXX.parquet` for one partition level, the bare
     * basename unpartitioned. Basenames alone are NOT unique on a
@@ -367,13 +398,9 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       matchRows: DataFrame => DataFrame
   ): Long = {
     repairCrashedSwap(layer, table)
-    val raw    = mergedRead(layer, table)
-    val depth  = partitionColumns(layer, table).length
-    val visible = dvRowsFor(layer, table, Long.MaxValue) match {
-      case Some(dv) => dvAntiJoin(withDvMeta(raw, depth), dv)
-      case None     => withDvMeta(raw, depth)
-    }
-    val matched = matchRows(visible)
+    val raw          = mergedRead(layer, table)
+    val (visible, _) = visibleWithPositions(layer, table, raw)
+    val matched      = matchRows(visible)
     if (matched.isEmpty) {
       logOp(layer, table, "DELETE_MOR", inserted = 0, updated = 0, outputRows = 0)
       return 0L
@@ -381,13 +408,7 @@ private[sources] trait WarehouseMor { self: Warehouse =>
     val ver = nextVersion(s"$layer.$table")
     val m   = matched.persist()
     try {
-      val obs = org.apache.spark.sql.Observation()
-      m.select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(dvPath(layer, table).toString)
-      val deleted = obs.get("n").asInstanceOf[Long]
+      val deleted = appendTombstones(layer, table, ver, m)
       appendFeed(layer, table, ver,
         m.drop("__dv_f", "__dv_p").withColumn("_change_type", lit("delete")))
       logOp(layer, table, "DELETE_MOR", inserted = 0, updated = 0,
@@ -423,32 +444,10 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       assignments: Map[String, Column]
   ): Long = {
     repairCrashedSwap(layer, table)
-    identityColumns(layer, table).foreach { case (c, _, _) =>
-      require(!assignments.keys.exists(_.equalsIgnoreCase(c)),
-        s"cannot UPDATE identity column $c (GENERATED ALWAYS AS IDENTITY)")
-    }
-    val gens = generatedColumns(layer, table)
-    if (gens.nonEmpty) {
-      val keys = assignments.keySet.map(_.toLowerCase)
-      gens.foreach { case (c, e) =>
-        require(!keys.contains(c.toLowerCase),
-          s"cannot UPDATE generated column $c (GENERATED ALWAYS AS $e)")
-        val overlap = exprDeps(e).intersect(keys)
-        require(overlap.isEmpty,
-          s"UPDATE assigns ${overlap.mkString(", ")}, which generated column " +
-            s"$c derives from — rewrite via createOrReplace to keep $c consistent")
-      }
-    }
-    val raw    = mergedRead(layer, table)
-    assignments.keys.foreach(c =>
-      require(raw.columns.contains(c), s"UPDATE assigns unknown column $c"))
-    val hit   = coalesce(predicate, lit(false))
-    val depth = partitionColumns(layer, table).length
-    val visible = dvRowsFor(layer, table, Long.MaxValue) match {
-      case Some(dv) => dvAntiJoin(withDvMeta(raw, depth), dv)
-      case None     => withDvMeta(raw, depth)
-    }
-    val matched = visible.filter(hit)
+    val raw = mergedRead(layer, table)
+    checkUpdateAssignments(layer, table, assignments, raw.columns.toSeq)
+    val (visible, _) = visibleWithPositions(layer, table, raw)
+    val matched      = visible.filter(coalesce(predicate, lit(false)))
     if (matched.isEmpty) {
       logOp(layer, table, "UPDATE_MOR", inserted = 0, updated = 0, outputRows = 0)
       return 0L
@@ -457,25 +456,14 @@ private[sources] trait WarehouseMor { self: Warehouse =>
     val m   = matched.persist()
     try {
       val pre  = m.drop("__dv_f", "__dv_p")
-      val post = pre.select(raw.schema.fields.toSeq.map { f =>
-        assignments.get(f.name) match {
-          case Some(a) => a.cast(f.dataType).as(f.name)
-          case None    => col(f.name)
-        }
-      }: _*)
+      val post = applyAssignments(pre, assignments)
       // new row images validated BEFORE anything lands — a violating
       // batch changes nothing, the COW contract
       enforceConstraints(layer, table, post, "UPDATE")
       // 1. tombstones first: until the ledger row commits, everything
       // this op wrote is identifiable (phantom DV partition + its
       // manifest) and [[repairCrashedSwap]] rolls all of it back
-      val obs = org.apache.spark.sql.Observation()
-      m.select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(dvPath(layer, table).toString)
-      val updated = obs.get("n").asInstanceOf[Long]
+      val updated = appendTombstones(layer, table, ver, m)
       // 2. post-images land via the shared MOR machinery: scratch dir,
       // manifest (rollback + time-travel hiding), then rename in
       morLandFiles(layer, table, ver, post)
@@ -554,13 +542,8 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       notMatched: Seq[MergeClause.NotMatched],
       bySource: Seq[MergeClause.BySource]
   ): Upsert.MergeClauseMetrics = {
-    val raw   = mergedRead(layer, table)
-    val depth = partitionColumns(layer, table).length
-    val tombstoneRows = dvRowsFor(layer, table, Long.MaxValue)
-    val visible = tombstoneRows match {
-      case Some(dv) => dvAntiJoin(withDvMeta(raw, depth), dv)
-      case None     => withDvMeta(raw, depth)
-    }
+    val raw                      = mergedRead(layer, table)
+    val (visible, tombstoneRows) = visibleWithPositions(layer, table, raw)
     val tgtAligned = visible.select(
       unioned.fields.toSeq.map { f =>
         if (visible.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
@@ -594,11 +577,7 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       val dataCols = unioned.fields.toSeq.map(f => col(f.name))
       val action   = col(Upsert.ActionCol)
       // 1. tombstones for the updated AND deleted rows' old positions
-      changes.filter(action.isin("update", "delete"))
-        .select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
-        .withColumn("_commit_part", lit(f"$ver%010d"))
-        .write.mode(SaveMode.Append).partitionBy("_commit_part")
-        .parquet(dvPath(layer, table).toString)
+      appendTombstones(layer, table, ver, changes.filter(action.isin("update", "delete")))
       // 2. post-images + inserts land as new files (manifest rollback);
       //    deletes land nothing — their tombstone IS the commit, so a
       //    delete-only merge appends zero data files (like [[deleteMor]])
@@ -688,65 +667,17 @@ private[sources] trait WarehouseMor { self: Warehouse =>
     val tombstones = dvRowsFor(layer, table, Long.MaxValue)
     if (tombstones.isEmpty) return 0L
     val dv      = tombstones.get
-    val target  = tablePath(layer, table)
     val raw     = mergedRead(layer, table)
     val pcols   = partitionColumns(layer, table)
-    val depth   = pcols.length
     val dvNames = dv.select("__dv_file").distinct().collect().map(_.getString(0)).toSet
     // match in the RAW (encoded) key domain, read via the decoded twin
-    val allPairs = raw.inputFiles.toSeq.map(r => (normDataFile(r), dvFileKey(r, depth)))
-    val allFiles = allPairs.map(_._1)
-    val touched  = allPairs.filter(p => dvNames.contains(p._2)).map(_._1)
+    val touched = raw.inputFiles.toSeq
+      .filter(r => dvNames.contains(dvFileKey(r, pcols.length))).map(normDataFile)
     if (touched.isEmpty) return 0L // tombstones all point at already-rewritten files
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    // touched files re-read as a direct scan (metadata columns live
-    // only there), tombstones subtracted, aligned to the full schema
-    val reader = spark.read.option("mergeSchema", "true")
-    val touchedRaw =
-      (if (pcols.nonEmpty) reader.option("basePath", target) else reader)
-        .parquet(touched: _*)
-    val survivors0 = dvAntiJoin(withDvMeta(touchedRaw, depth), dv).drop("__dv_f", "__dv_p")
-    val survivors = survivors0.select(raw.schema.fields.toSeq.map { f =>
-      if (survivors0.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    val keptObs = org.apache.spark.sql.Observation()
-    val w = survivors.observe(keptObs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(staging.toString)
-    val touchedSet = touched.toSet
-    if (pcols.isEmpty) {
-      val carry = allFiles.filterNot(touchedSet)
-      copyFilesInto(carry.map((_, "")), staging)
-      val keptRewritten = keptObs.get("n").asInstanceOf[Long]
-      val keptCarried =
-        if (carry.isEmpty) 0L else spark.read.parquet(carry: _*).count()
-      retireAndSwap(layer, table, staging)
-      logOp(layer, table, "REORG", inserted = 0, updated = 0,
-        outputRows = keptRewritten + keptCarried)
-    } else {
-      // partition-scoped: only the directories holding touched files
-      // swap; untouched directories are never listed or copied.
-      // Compare in the scheme-less URI path domain — inputFiles carry
-      // a `file:`/`hdfs:` scheme, tablePath may not
-      val targetP    = new Path(target)
-      val targetNorm = targetP.toUri.getPath
-      val retireDirs = touched.map { f =>
-        val rel = new Path(f).toUri.getPath.stripPrefix(targetNorm).stripPrefix("/")
-        rel.substring(0, rel.lastIndexOf('/'))
-      }.distinct
-      val carryPairs = dataFilesUnder(targetP, retireDirs)
-        .filterNot(p => touchedSet.contains(p._1))
-      copyFilesInto(carryPairs, staging)
-      val keptRewritten = keptObs.get("n").asInstanceOf[Long]
-      val keptCarried =
-        if (carryPairs.isEmpty) 0L
-        else footerRowCount(carryPairs.map(_._1), Some(target))
-      swapPartitions(layer, table, staging, retireDirs, pcols.length)
-      logOp(layer, table, "REORG", inserted = 0, updated = 0,
-        outputRows = keptRewritten + keptCarried)
-    }
+    val (_, outputRows) = rewriteFiles(layer, table, raw, pcols, touched.toSet,
+      touched.map(partitionTupleOf(_, pcols, raw.schema)).distinct,
+      t => dvAntiJoin(withDvMeta(t, pcols.length), dv).drop("__dv_f", "__dv_p"))((_, _) => ())
+    logOp(layer, table, "REORG", inserted = 0, updated = 0, outputRows = outputRows)
     touched.size.toLong
   }
 }

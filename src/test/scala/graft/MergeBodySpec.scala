@@ -75,6 +75,25 @@ class MergeBodySpec extends SparkSpec {
     }
   }
 
+  test("an empty source returns the same WriteMetrics on a flat and a partitioned twin") {
+    import spark.implicits._
+    val base = (1L to 30L).map(k => (k, s"p$k", 0L, if (k <= 10) "a" else "b"))
+      .toDF("k", "payload", "ver", "pt")
+    val wh = freshWh()
+    wh.createOrReplace("silver", "flat", base.coalesce(1))
+    wh.createOrReplacePartitioned("silver", "part", base.coalesce(1), Seq("pt"))
+    val empty = base.limit(0)
+    val mFlat = wh.upsert("silver", "flat", empty, Seq("k"), "ver")
+    val mPart = wh.upsert("silver", "part", empty, Seq("k"), "ver")
+    assert(mFlat == Upsert.WriteMetrics(inserted = 0, updated = 0, kept = 30))
+    assert(mPart == mFlat)
+    for (t <- Seq("flat", "part")) {
+      val op = wh.lastOperation(s"silver.$t").get
+      assert(op.getAs[String]("operation") == "MERGE" && op.getAs[Long]("num_inserted") == 0L &&
+        op.getAs[Long]("num_updated") == 0L && op.getAs[Long]("num_output_rows") == 0L, t)
+    }
+  }
+
   test("duplicate source rows that all lose the version rule commit and keep the target row once") {
     import spark.implicits._
     for (mor <- Seq(false, true)) {
