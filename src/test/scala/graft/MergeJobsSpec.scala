@@ -12,11 +12,16 @@ import org.apache.spark.sql.functions._
   * re-run, full-clause MERGE with a DELETE clause and with a BY SOURCE
   * clause, both merge-on-read MERGE entry points, flat and partitioned
   * DELETE (and a zero-match DELETE) and UPDATE, merge-on-read DELETE and
-  * UPDATE, REORG on both layouts, and incremental Z-order. Each shape
-  * pins three things: the Spark jobs its call starts may not exceed
-  * `maxJobs` (the count before the MERGE bodies, and later the
-  * DELETE/UPDATE/REORG/Z-order rewrites, were unified), and its ledger
-  * row and change-feed rows equal the values recorded then.
+  * UPDATE, REORG on both layouts, and incremental Z-order; and every
+  * whole-table replace and compaction: flat and partitioned CTAS,
+  * APPEND, flat and partitioned COMPACT, partition-scoped compaction
+  * (with a zero-match predicate), auto-compaction on both layouts,
+  * Z-order, RENAME and DROP COLUMN, RESTORE, and CLONE with and without
+  * live tombstones. Each shape pins three things: the Spark jobs its
+  * call starts may not exceed `maxJobs` (the count before the MERGE
+  * bodies, the DELETE/UPDATE/REORG/Z-order rewrites and the
+  * whole-table replaces were unified), and its ledger row and
+  * change-feed rows equal the values recorded then.
   */
 class MergeJobsSpec extends SparkSpec {
 
@@ -101,7 +106,7 @@ class MergeJobsSpec extends SparkSpec {
       expectedFeed: Seq[(String, Long, String, Long)]
   ): Unit = {
     info(s"$shape: $jobs jobs (at most $maxJobs)")
-    assert(jobs > 0, s"$shape: the job counter saw nothing")
+    assert(maxJobs == 0 || jobs > 0, s"$shape: the job counter saw nothing")
     assert(jobs <= maxJobs, s"$shape: $jobs jobs, more than the $maxJobs it used to take")
     assert(ledger._1 == expectedLedger, s"$shape ledger row")
     assert(feed == expectedFeed, s"$shape feed rows")
@@ -312,5 +317,135 @@ class MergeJobsSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(wh.tablePath("silver", "t") + ".__changes")))
     check("zorderIncremental", jobs, maxJobs = 5, ledger, ("ZORDER", 0L, 0L, 0L, 42L),
       Seq.empty, Seq.empty)
+  }
+
+  // ---- whole-table replaces and compaction ----
+
+  private val NoFeed = Seq.empty[(String, Long, String, Long)]
+
+  test("flat and partitioned createOrReplace, then append") {
+    import spark.implicits._
+    val wh = freshWh()
+    val (n, jobs) = countJobs(wh.createOrReplace("silver", "t",
+      (1L to 20L).map(k => (k, s"p$k", 0L)).toDF("k", "payload", "ver").coalesce(1)))
+    assert(n == 20L)
+    check("flat createOrReplace", jobs, maxJobs = 1, ledgerRow(wh, "t"),
+      ("CREATE OR REPLACE", 20L, 0L, 0L, 20L), NoFeed, NoFeed)
+    // CTAS and APPEND run on every pipeline date: exactly, not at most
+    assert(jobs == 1)
+    val (na, jobsA) = countJobs(wh.append("silver", "t",
+      (21L to 25L).map(k => (k, s"p$k", 0L)).toDF("k", "payload", "ver").coalesce(1)))
+    assert(na == 5L)
+    check("append", jobsA, maxJobs = 1, ledgerRow(wh, "t"),
+      ("APPEND", 5L, 0L, 0L, 5L), NoFeed, NoFeed)
+    assert(jobsA == 1)
+    val (np, jobsP) = countJobs(wh.createOrReplacePartitioned("silver", "p",
+      (1L to 30L).map(k => (k, s"p$k", 0L, if (k <= 10) "a" else if (k <= 20) "b" else "c"))
+        .toDF("k", "payload", "ver", "pt").coalesce(1), Seq("pt")))
+    assert(np == 30L)
+    check("partitioned createOrReplace", jobsP, maxJobs = 1, ledgerRow(wh, "p"),
+      ("CREATE OR REPLACE", 30L, 0L, 0L, 30L), NoFeed, NoFeed)
+    assert(jobsP == 1)
+    assert(wh.partitionColumns("silver", "p") == Seq("pt"))
+  }
+
+  test("flat compact") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(wh.compact("silver", "t"))
+    assert(n == 1L, "two files compact into one")
+    check("flat compact", jobs, maxJobs = 5, ledgerRow(wh, "t"),
+      ("COMPACT", 0L, 0L, 0L, 40L), NoFeed, NoFeed)
+    assert(wh.table("silver", "t").count() == 40L)
+  }
+
+  test("partitioned compact") {
+    val wh = freshWh()
+    partBase(wh)
+    val (n, jobs) = countJobs(wh.compact("silver", "p"))
+    assert(n == 1L, "partition a's two files compact into one")
+    check("partitioned compact", jobs, maxJobs = 6, ledgerRow(wh, "p"),
+      ("COMPACT", 0L, 0L, 0L, 35L), NoFeed, NoFeed)
+    assert(wh.partitionColumns("silver", "p") == Seq("pt"))
+    assert(wh.table("silver", "p").count() == 35L)
+  }
+
+  test("compactWhere, then a zero-match compactWhere") {
+    val wh = freshWh()
+    partBase(wh)
+    val (n, jobs) = countJobs(wh.compactWhere("silver", "p", col("pt") === "a"))
+    assert(n == 1L, "partition a's two files compact into one")
+    check("compactWhere", jobs, maxJobs = 8, ledgerRow(wh, "p"),
+      ("COMPACT", 0L, 0L, 0L, 15L), NoFeed, NoFeed)
+    assert(wh.table("silver", "p").count() == 35L)
+    val (n0, jobs0) = countJobs(wh.compactWhere("silver", "p", col("pt") === "zz"))
+    assert(n0 == 0L)
+    check("zero-match compactWhere", jobs0, maxJobs = 0, ledgerRow(wh, "p"),
+      ("COMPACT", 0L, 0L, 0L, 0L), NoFeed, NoFeed)
+  }
+
+  test("flat and partitioned autoCompact") {
+    import spark.implicits._
+    val wh = freshWh()
+    flatBase(wh)
+    wh.append("silver", "t",
+      Seq((41L, "p41", 0L)).toDF("k", "payload", "ver").coalesce(1))
+    val (n, jobs) = countJobs(wh.autoCompact("silver", "t", maxFilesPerPartition = 2))
+    assert(n == 1L, "the flat table is one offender")
+    check("flat autoCompact", jobs, maxJobs = 5, ledgerRow(wh, "t"),
+      ("COMPACT", 0L, 0L, 0L, 41L), NoFeed, NoFeed)
+    partBase(wh)
+    val (np, jobsP) = countJobs(wh.autoCompact("silver", "p", maxFilesPerPartition = 1))
+    assert(np == 1L, "partition a is the one offender")
+    check("partitioned autoCompact", jobsP, maxJobs = 8, ledgerRow(wh, "p"),
+      ("COMPACT", 0L, 0L, 0L, 15L), NoFeed, NoFeed)
+    assert(wh.table("silver", "p").count() == 35L)
+  }
+
+  test("zorder") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(wh.zorder("silver", "t", Seq("k", "ver")))
+    assert(n == 40L)
+    check("zorder", jobs, maxJobs = 6, ledgerRow(wh, "t"),
+      ("ZORDER", 0L, 0L, 0L, 40L), NoFeed, NoFeed)
+  }
+
+  test("renameColumn and dropColumn") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (_, jobs) = countJobs(wh.renameColumn("silver", "t", "payload", "body"))
+    check("renameColumn", jobs, maxJobs = 1, ledgerRow(wh, "t"),
+      ("RENAME COLUMN", 0L, 0L, 0L, 40L), NoFeed, NoFeed)
+    val (_, jobsD) = countJobs(wh.dropColumn("silver", "t", "body"))
+    check("dropColumn", jobsD, maxJobs = 2, ledgerRow(wh, "t"),
+      ("DROP COLUMN", 0L, 0L, 0L, 40L), NoFeed, NoFeed)
+    assert(wh.table("silver", "t").columns.toSeq == Seq("k", "ver"))
+  }
+
+  test("restore") {
+    val wh = freshWh()
+    flatBase(wh)
+    wh.delete("silver", "t", col("k").isin(2L, 3L))
+    val (n, jobs) = countJobs(wh.restore("silver", "t", 1L))
+    assert(n == 40L)
+    check("restore", jobs, maxJobs = 2, ledgerRow(wh, "t"),
+      ("RESTORE", 40L, 0L, 0L, 40L), NoFeed, NoFeed)
+    assert(wh.table("silver", "t").count() == 40L)
+  }
+
+  test("cloneTable without and with live tombstones") {
+    val wh = freshWh()
+    flatBase(wh)
+    val (n, jobs) = countJobs(wh.cloneTable("silver", "t", "silver", "c"))
+    assert(n == 40L)
+    check("cloneTable", jobs, maxJobs = 4, ledgerRow(wh, "c"),
+      ("CLONE", 40L, 0L, 0L, 40L), NoFeed, NoFeed)
+    wh.deleteMor("silver", "t", col("k") === 2L)
+    val (nd, jobsD) = countJobs(wh.cloneTable("silver", "t", "silver", "d"))
+    assert(nd == 39L)
+    check("cloneTable with tombstones", jobsD, maxJobs = 14, ledgerRow(wh, "d"),
+      ("CLONE", 39L, 0L, 0L, 39L), NoFeed, NoFeed)
+    assert(wh.table("silver", "d").count() == 39L)
   }
 }
