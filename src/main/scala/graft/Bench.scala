@@ -3,23 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r19 (verdict item 4): the same join-strategy baseline as
-      // Engine.session — shuffled-hash when it fits (guide §3.1/§9),
-      // A/B'd in tools/JoinSweep (geomean 0.90 over the join-heavy
-      // slate, strategy-only, values unchanged). Declared in
-      // OPTIMIZATION_r19.md; methodology/timing/output are untouched.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine's own session (join-strategy configs and
+    // GraftExtensions included), the same one Verify checks
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Best-of-3 per query: the first run pays JIT/codegen warm-up, and
     // this VM shows sporadic multi-second host-level stall waves — the
     // min of three runs is the steady-state number a long-running

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter: String => Boolean =
       if (args.length > 2) (n: String) => n.contains(args(2)) else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine's own session, so the oracle checks the configuration
+    // that is benched
+    val spark = Engine.session(cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // A failed query must attest itself in the dump — a swallowed throw
     // looks identical to a *removed* query in the driver's correctness

@@ -299,14 +299,19 @@ final class Warehouse(
       tgt.fields ++ src.fields.filterNot(f => tgt.fieldNames.contains(f.name)))
   }
 
-  /** Project df onto `schema`, null-backfilling columns it lacks. */
+  /** Project df onto `schema`, each column cast to its schema type
+    * (a no-op under [[unionSchema]]'s equal-type rule) and columns it
+    * lacks null-backfilled; the `keep` columns ride along after them.
+    */
   private[sources] def alignTo(
       df: DataFrame,
-      schema: org.apache.spark.sql.types.StructType
+      schema: StructType,
+      keep: Seq[String] = Seq.empty
   ): DataFrame =
-    df.select(schema.fields.map { f =>
-      if (df.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
+    df.select(schema.fields.toSeq.map { f =>
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    } ++ keep.map(col): _*)
 
   def listTables(layer: String): Seq[String] = {
     val p = new Path(s"$root/$layer")
@@ -321,6 +326,48 @@ final class Warehouse(
         .toSeq
         .sorted
   }
+
+  /** The staging directory beside `path` (`<path>.__staging`),
+    * emptied: every staged write of a table or a sidecar starts here.
+    */
+  private[sources] def freshStaging(path: String): Path = {
+    val staging = new Path(path + ".__staging")
+    fs.delete(staging, true)
+    staging
+  }
+
+  /** Write `df` as parquet to `dest`, hive-partitioned by
+    * `partitionCols`, and return its row count, observed from the write
+    * job itself — a re-read would scan every written byte a second time.
+    */
+  private[sources] def writeCounted(
+      df: DataFrame,
+      dest: String,
+      partitionCols: Seq[String] = Seq.empty,
+      mode: SaveMode = SaveMode.Overwrite
+  ): Long = {
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("n"))
+      .write.mode(mode).partitionBy(partitionCols: _*).parquet(dest)
+    obs.get("n").asInstanceOf[Long]
+  }
+
+  /** The one whole-table replace: crash repair, a fresh staging dir,
+    * `stage` writes the new generation into it and returns its row
+    * count, then the generation swaps in ([[retireAndSwap]]). Returns
+    * the row count; the caller records the ledger commit.
+    */
+  private[sources] def replaceTable(layer: String, table: String)(stage: Path => Long): Long = {
+    repairCrashedSwap(layer, table)
+    val staging = freshStaging(tablePath(layer, table))
+    val rows    = stage(staging)
+    retireAndSwap(layer, table, staging)
+    rows
+  }
+
+  /** Rename `from` to `to`, throwing when the filesystem refuses. */
+  private[sources] def renameOrFail(from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
 
   /** Swap a fully-written staging dir into place. The outgoing
     * generation is RENAMED aside (`<table>.__v<version>`), never
@@ -339,12 +386,10 @@ final class Warehouse(
       val prev    = latestVersion(s"$layer.$table")
       val retired = new Path(tablePath(layer, table) + s".__v$prev")
       fs.delete(retired, true) // idempotent re-run of the same version
-      if (!fs.rename(target, retired))
-        throw new java.io.IOException(s"rename $target -> $retired failed")
+      renameOrFail(target, retired)
     }
     maybeFail("after-retire")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
+    renameOrFail(staging, target)
     maybeFail("after-swap")
     pruneGenerations(layer, table)
   }
@@ -606,8 +651,7 @@ final class Warehouse(
       if (fs.exists(live)) {
         val ret = new Path(retired, rel)
         fs.mkdirs(ret.getParent)
-        if (!fs.rename(live, ret))
-          throw new java.io.IOException(s"rename $live -> $ret failed")
+        renameOrFail(live, ret)
       }
     }
     maybeFail("after-retire")
@@ -618,12 +662,10 @@ final class Warehouse(
         // pre-image rather than nesting the rename inside it
         val ret = new Path(retired, rel)
         fs.mkdirs(ret.getParent)
-        if (!fs.rename(dst, ret))
-          throw new java.io.IOException(s"rename $dst -> $ret failed")
+        renameOrFail(dst, ret)
       }
       fs.mkdirs(dst.getParent)
-      if (!fs.rename(new Path(staging, rel), dst))
-        throw new java.io.IOException(s"rename ${new Path(staging, rel)} -> $dst failed")
+      renameOrFail(new Path(staging, rel), dst)
     }
     maybeFail("after-swap")
     fs.delete(staging, true)
@@ -687,14 +729,12 @@ final class Warehouse(
           val live = new Path(target, rel)
           fs.delete(live, true) // uncommitted replacement, if the swap got that far
           fs.mkdirs(live.getParent)
-          if (!fs.rename(new Path(gen, rel), live))
-            throw new java.io.IOException(s"rollback rename ${new Path(gen, rel)} -> $live failed")
+          renameOrFail(new Path(gen, rel), live)
         }
         fs.delete(gen, true)
       } else {
         fs.delete(target, true) // uncommitted replacement, if the swap got that far
-        if (!fs.rename(gen, target))
-          throw new java.io.IOException(s"rollback rename $gen -> $target failed")
+        renameOrFail(gen, target)
       }
     }
     // phantom feed rows: any feed partition beyond the committed
@@ -860,26 +900,25 @@ final class Warehouse(
     */
   def writeScalarLong(layer: String, table: String, colName: String, value: Long): Unit =
     withWriterLock(layer, table) {
-      repairCrashedSwap(layer, table)
-      val staging = new Path(tablePath(layer, table) + ".__staging")
-      fs.delete(staging, true)
-      fs.mkdirs(staging)
-      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-        s"message scalar { required int64 $colName; }")
-      val file = new Path(staging, s"part-graft-${java.util.UUID.randomUUID()}.snappy.parquet")
-      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-          file, spark.sparkContext.hadoopConfiguration))
-        .withType(schema)
-        .withCompressionCodec(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-      try {
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-        g.append(colName, value)
-        writer.write(g)
-      } finally writer.close()
-      retireAndSwap(layer, table, staging)
+      replaceTable(layer, table) { staging =>
+        fs.mkdirs(staging)
+        val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+          s"message scalar { required int64 $colName; }")
+        val file = new Path(staging, s"part-graft-${java.util.UUID.randomUUID()}.snappy.parquet")
+        val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+          .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+            file, spark.sparkContext.hadoopConfiguration))
+          .withType(schema)
+          .withCompressionCodec(
+            org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+          .build()
+        try {
+          val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+          g.append(colName, value)
+          writer.write(g)
+        } finally writer.close()
+        1L
+      }
       logOp(layer, table, "CREATE OR REPLACE", inserted = 1, updated = 0, outputRows = 1)
     }
 
@@ -1106,14 +1145,7 @@ final class Warehouse(
       .groupBy { rel =>
         ExternalCatalogUtils.unescapePathName(rel.split("/").last.split("=", 2)(1))
       }
-      .map { case (action, rels) =>
-        action -> rels.flatMap { rel =>
-          fs.listStatus(new Path(staging, rel)).collect {
-            case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".") => s.getPath.toString
-          }
-        }
-      }
+      .map { case (action, rels) => action -> dataFilesUnder(staging, rels).map(_._1) }
   }
 
   /** Fold the `keep` actions' staged files up one level (dropping the
@@ -1134,16 +1166,10 @@ final class Warehouse(
       val action = ExternalCatalogUtils.unescapePathName(rel.split("/").last.split("=", 2)(1))
       val dir    = new Path(staging, rel)
       if (keep.contains(action)) {
-        fs.listStatus(dir)
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .foreach { s =>
-            val dst = new Path(dir.getParent, s"$action-${s.getPath.getName}")
-            if (!fs.rename(s.getPath, dst))
-              throw new java.io.IOException(s"rename ${s.getPath} -> $dst failed")
-          }
+        dataFilesUnder(staging, Seq(rel)).foreach { case (f, _) =>
+          val src = new Path(f)
+          renameOrFail(src, new Path(dir.getParent, s"$action-${src.getName}"))
+        }
       }
       fs.delete(dir, true)
       ()
@@ -1165,11 +1191,7 @@ final class Warehouse(
     * the invariant the plain (non-action-partitioned) staged write had.
     */
   private[sources] def ensureStagedSchema(staging: Path, schema: StructType): Unit = {
-    val hasData = fs.exists(staging) && fs.listStatus(staging).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!hasData) {
+    if (dataFilesUnder(staging, Seq("")).isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(staging.toString)
@@ -1194,20 +1216,16 @@ final class Warehouse(
     // outside `full` were dropped by the select below either way
     val reader = basePath.foldLeft(spark.read.schema(full))(
       (r, bp) => r.option("basePath", bp))
-    val raw = reader.parquet(files: _*)
-    raw.select(full.fields.toSeq.map { f =>
-      if (raw.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    alignTo(reader.parquet(files: _*), full)
   }
 
   /** Data files (with their relative leaf dir) under the given hive
-    * leaf dirs of `target` — the COW carry-over candidates of a
-    * partition-scoped DML op.
+    * leaf dirs of `target` ("" for `target` itself) — the COW
+    * carry-over candidates of a partition-scoped DML op.
     */
   private[sources] def dataFilesUnder(target: Path, relDirs: Seq[String]): Seq[(String, String)] =
     relDirs.flatMap { rel =>
-      val dir = new Path(target, rel)
+      val dir = if (rel.isEmpty) target else new Path(target, rel)
       if (!fs.exists(dir)) Seq.empty
       else
         fs.listStatus(dir)
@@ -1218,6 +1236,12 @@ final class Warehouse(
           .map(s => (new Path(s.getPath.toString).toString, rel))
           .toSeq
     }
+
+  /** Every data file of the table rooted at `root`, hive leaf dirs
+    * `depth` deep, with its relative leaf dir — a driver-side listing.
+    */
+  private[sources] def allDataFiles(root: Path, depth: Int): Seq[(String, String)] =
+    dataFilesUnder(root, if (depth == 0) Seq("") else leafPartitionDirs(root, depth))
 
 
   /** Hold several tables' writer locks at once — the closest thing the

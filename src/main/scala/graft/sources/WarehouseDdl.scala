@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Table DDL beyond plain writes: GENERATED ALWAYS AS IDENTITY
   * columns, CREATE TABLE CLONE (deep clone), and column RENAME / DROP
-  * with reference-safety checks. Split from Warehouse.scala for
-  * reviewability — no behavior change.
+  * with reference-safety checks. CLONE and the column DDL are
+  * whole-table replaces through [[Warehouse.replaceTable]], the one
+  * staged-swap body every replacing write shares.
   */
 private[sources] trait WarehouseDdl { self: Warehouse =>
 
@@ -198,38 +199,20 @@ private[sources] trait WarehouseDdl { self: Warehouse =>
       require(!(srcLayer == dstLayer && srcTable == dstTable),
         "cannot clone a table onto itself")
       repairCrashedSwap(srcLayer, srcTable)
-      repairCrashedSwap(dstLayer, dstTable)
       require(tableExists(srcLayer, srcTable), s"$srcLayer.$srcTable does not exist")
-      val target  = tablePath(dstLayer, dstTable)
-      val staging = new Path(target + ".__staging")
-      fs.delete(staging, true)
       val pcols = partitionColumns(srcLayer, srcTable)
-      val rows =
-        if (dvRowsFor(srcLayer, srcTable, Long.MaxValue).isDefined) {
-          val obs = org.apache.spark.sql.Observation()
-          val w = this.table(srcLayer, srcTable)
-            .observe(obs, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite)
-          (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(staging.toString)
-          obs.get("n").asInstanceOf[Long]
-        } else {
-          val srcRoot = new Path(tablePath(srcLayer, srcTable))
-          val pairs =
-            if (pcols.isEmpty)
-              fs.listStatus(srcRoot)
-                .filter { s =>
-                  val n = s.getPath.getName
-                  s.isFile && !n.startsWith("_") && !n.startsWith(".")
-                }
-                .map(s => (s.getPath.toString, ""))
-                .toSeq
-            else dataFilesUnder(srcRoot, leafPartitionDirs(srcRoot, pcols.length))
+      val rows = replaceTable(dstLayer, dstTable) { staging =>
+        if (dvRowsFor(srcLayer, srcTable, Long.MaxValue).isDefined)
+          writeCounted(this.table(srcLayer, srcTable), staging.toString, pcols)
+        else {
+          val srcRoot = tablePath(srcLayer, srcTable)
+          val pairs   = allDataFiles(new Path(srcRoot), pcols.length)
           copyFilesInto(pairs, staging)
           fs.createNewFile(new Path(staging, "_SUCCESS")) // the existence marker
-          // footer-only count of the staged copy — no data decode
-          spark.read.parquet(staging.toString).count()
+          // footer-only count of the copied files — no data decode
+          footerRowCount(pairs.map(_._1), Some(srcRoot))
         }
-      retireAndSwap(dstLayer, dstTable, staging)
+      }
       writeConstraintsSidecar(dstLayer, dstTable, constraints(srcLayer, srcTable))
       writeGeneratedSidecar(dstLayer, dstTable, generatedColumns(srcLayer, srcTable))
       writeIdentitySidecar(dstLayer, dstTable, identityColumns(srcLayer, srcTable))
@@ -242,16 +225,17 @@ private[sources] trait WarehouseDdl { self: Warehouse =>
   // Delta supports RENAME/DROP COLUMN as metadata-only operations via
   // column mapping (columns addressed by id, physical names never
   // change). The snapshot-dir engine addresses columns by their
-  // parquet names, so both ops are ONE layout-preserving staged
-  // rewrite — the cost class Delta charges WITHOUT column mapping
-  // enabled, and the same machinery as COMPACT. What the engine keeps
-  // from the Delta contract: the operation is atomic (staged swap),
-  // history is version-addressed (time travel to a pre-rename version
-  // shows the old schema, exactly like Delta), recorded contracts
-  // refuse the change when they reference the column (drop the
-  // constraint / generated declaration first — silent breakage of a
-  // CHECK expression is worse than a refusal), and partition columns
-  // refuse (the directory layout IS the column).
+  // parquet names, so both ops are ONE layout-preserving whole-table
+  // replace ([[replaceTable]], the body CTAS and COMPACT use) through
+  // [[columnDdl]] — the cost class Delta charges WITHOUT column
+  // mapping enabled. What the engine keeps from the Delta contract: the
+  // operation is atomic (staged swap), history is version-addressed
+  // (time travel to a pre-rename version shows the old schema, exactly
+  // like Delta), recorded contracts refuse the change when they
+  // reference the column (drop the constraint / generated declaration
+  // first — silent breakage of a CHECK expression is worse than a
+  // refusal), and partition columns refuse (the directory layout IS
+  // the column).
 
   private[sources] def requireColumnUnreferenced(
       layer: String, table: String, colName: String, op: String): Unit = {
@@ -279,59 +263,44 @@ private[sources] trait WarehouseDdl { self: Warehouse =>
   /** ALTER TABLE ... RENAME COLUMN from TO to. */
   def renameColumn(layer: String, table: String, from: String, to: String): Unit =
     withWriterLock(layer, table) {
-      repairCrashedSwap(layer, table)
-      materializeDv(layer, table) // rewrite never runs against live tombstones
-      val df = rawTable(layer, table)
-      require(df.columns.exists(_.equalsIgnoreCase(from)), s"no such column $from")
-      require(!df.columns.exists(_.equalsIgnoreCase(to)),
-        s"cannot rename $from to $to: $to already exists")
-      val pcols = partitionColumns(layer, table)
-      require(!pcols.exists(_.equalsIgnoreCase(from)),
-        s"cannot rename partition column $from — the directory layout is the column; " +
-          "rewrite via createOrReplacePartitioned")
-      requireColumnUnreferenced(layer, table, from, "rename")
-      val target  = tablePath(layer, table)
-      val staging = new Path(target + ".__staging")
-      fs.delete(staging, true)
-      val obs = org.apache.spark.sql.Observation()
-      val w = df.withColumnRenamed(from, to)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite)
-      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(staging.toString)
-      val rows = obs.get("n").asInstanceOf[Long]
-      retireAndSwap(layer, table, staging)
-      // the old name's bloom sidecar is now unreachable — remove it;
-      // stats refresh incrementally off the new file set on next use
-      fs.delete(bloomPath(layer, table, from), true)
-      logOp(layer, table, "RENAME COLUMN", inserted = 0, updated = 0, outputRows = rows)
-      ()
+      columnDdl(layer, table, "RENAME COLUMN", from) { df =>
+        require(!df.columns.exists(_.equalsIgnoreCase(to)),
+          s"cannot rename $from to $to: $to already exists")
+        df.withColumnRenamed(from, to)
+      }
     }
 
   /** ALTER TABLE ... DROP COLUMN colName. */
   def dropColumn(layer: String, table: String, colName: String): Unit =
     withWriterLock(layer, table) {
-      repairCrashedSwap(layer, table)
-      materializeDv(layer, table) // rewrite never runs against live tombstones
-      val df = rawTable(layer, table)
-      require(df.columns.exists(_.equalsIgnoreCase(colName)), s"no such column $colName")
-      require(df.columns.length > 1, s"cannot drop $colName: it is the only column")
-      val pcols = partitionColumns(layer, table)
-      require(!pcols.exists(_.equalsIgnoreCase(colName)),
-        s"cannot drop partition column $colName — the directory layout is the column; " +
-          "rewrite via createOrReplacePartitioned")
-      requireColumnUnreferenced(layer, table, colName, "drop")
-      val target  = tablePath(layer, table)
-      val staging = new Path(target + ".__staging")
-      fs.delete(staging, true)
-      val obs = org.apache.spark.sql.Observation()
-      val w = df.drop(colName)
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite)
-      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(staging.toString)
-      val rows = obs.get("n").asInstanceOf[Long]
-      retireAndSwap(layer, table, staging)
-      fs.delete(bloomPath(layer, table, colName), true)
-      logOp(layer, table, "DROP COLUMN", inserted = 0, updated = 0, outputRows = rows)
-      ()
+      columnDdl(layer, table, "DROP COLUMN", colName) { df =>
+        require(df.columns.length > 1, s"cannot drop $colName: it is the only column")
+        df.drop(colName)
+      }
     }
+
+  /** The one body of RENAME and DROP COLUMN: the checks on `colName`
+    * (it exists, is no partition column and no recorded contract
+    * references it), then the table rewritten through `project` — which
+    * runs the op's own checks first — in its live layout. The column's
+    * bloom sidecar is unreachable afterwards and goes; stats refresh
+    * incrementally off the new file set on next use. Ledger op `op`.
+    */
+  private def columnDdl(layer: String, table: String, op: String, colName: String)(
+      project: DataFrame => DataFrame): Unit = {
+    val verb = op.takeWhile(_ != ' ').toLowerCase // "rename" | "drop"
+    repairCrashedSwap(layer, table)
+    materializeDv(layer, table) // rewrite never runs against live tombstones
+    val df = rawTable(layer, table)
+    require(df.columns.exists(_.equalsIgnoreCase(colName)), s"no such column $colName")
+    val out   = project(df)
+    val pcols = partitionColumns(layer, table)
+    require(!pcols.exists(_.equalsIgnoreCase(colName)),
+      s"cannot $verb partition column $colName — the directory layout is the column; " +
+        "rewrite via createOrReplacePartitioned")
+    requireColumnUnreferenced(layer, table, colName, verb)
+    val rows = replaceTable(layer, table)(staging => writeCounted(out, staging.toString, pcols))
+    fs.delete(bloomPath(layer, table, colName), true)
+    logOp(layer, table, op, inserted = 0, updated = 0, outputRows = rows)
+  }
 }

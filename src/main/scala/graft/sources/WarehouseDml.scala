@@ -6,14 +6,18 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Copy-on-write DML: CTAS, APPEND, DELETE, UPDATE and MERGE. DELETE,
-  * UPDATE, REORG and incremental Z-order rewrite through one
+/** Copy-on-write DML: CTAS, APPEND, DELETE, UPDATE and MERGE. CTAS is
+  * a whole-table replace through [[Warehouse.replaceTable]], the body
+  * every replacing write shares. DELETE, UPDATE, REORG, incremental
+  * Z-order and partition-scoped compaction rewrite through one
   * file-granular body, [[rewriteFiles]]; MERGE has its own front end
   * and copy-on-write body ([[mergeCow]]), which also decides which
-  * action every row takes. Every body commits its change rows through
-  * [[appendFeed]]. A flat table is the no-partition-columns case of
-  * each body. The members self-type on [[Warehouse]] and share its
-  * package-private core (locks, staged swap, ledger).
+  * action every row takes. UPDATE and MERGE share one assignment guard
+  * ([[checkAssignments]]). Every body commits its change rows through
+  * [[appendFeed]], and every counted write is [[Warehouse.writeCounted]].
+  * A flat table is the no-partition-columns case of each body. The
+  * members self-type on [[Warehouse]] and share its package-private
+  * core (locks, staged swap, ledger).
   */
 private[sources] trait WarehouseDml { self: Warehouse =>
 
@@ -76,16 +80,12 @@ private[sources] trait WarehouseDml { self: Warehouse =>
         val rd = retireDirsFor(new Path(target), pcols, read.schema, parts)
         (rd, dataFilesUnder(new Path(target), rd).filterNot(p => files.contains(p._1)))
       }
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
+    val staging = freshStaging(target)
     val touched = readFilesAligned(files.toSeq, read.schema, basePath = Some(target))
     val rows    = rewrite(touched)
-    val obs     = org.apache.spark.sql.Observation()
-    (if (pcols.isEmpty) rows else clusterStaged(rows, pcols, parts.length))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(staging.toString)
+    val rewritten = writeCounted(
+      if (pcols.isEmpty) rows else clusterStaged(rows, pcols, parts.length), staging.toString, pcols)
     copyFilesInto(carry, staging)
-    val rewritten = obs.get("n").asInstanceOf[Long]
     // footer-only count BEFORE the feed write keeps the feed-to-ledger
     // commit window minimal (see [[mergeCow]])
     val carried = footerRowCount(carry.map(_._1), Some(target))
@@ -118,8 +118,9 @@ private[sources] trait WarehouseDml { self: Warehouse =>
 
   /** `df` with `assignments` applied to the rows `hit` selects, each
     * value cast to its column's existing type — an UPDATE never changes
-    * the schema. Assignments evaluate against the pre-update row (one
-    * projection, SQL UPDATE semantics).
+    * the schema. Assignment keys match column names case-insensitively,
+    * as MERGE's SET clauses do. Assignments evaluate against the
+    * pre-update row (one projection, SQL UPDATE semantics).
     */
   private[sources] def applyAssignments(
       df: DataFrame,
@@ -127,40 +128,43 @@ private[sources] trait WarehouseDml { self: Warehouse =>
       hit: Column = lit(true)
   ): DataFrame =
     df.select(df.schema.fields.toSeq.map { f =>
-      assignments.get(f.name) match {
+      assignments.collectFirst { case (k, a) if k.equalsIgnoreCase(f.name) => a } match {
         case Some(a) => when(hit, a.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
         case None    => col(f.name)
       }
     }: _*)
 
-  /** The checks both UPDATE paths ([[update]], [[updateMor]]) run on
-    * their assignments: real columns only, never an identity column
-    * (its values are engine-owned), never a generated column nor one
-    * it derives from — assignments evaluate against PRE-update rows,
-    * so an inline recompute would read stale sources; rewrite via
-    * createOrReplace to change a derivation.
+  /** The checks every UPDATE and MERGE runs on the column names it
+    * assigns, case-insensitively: real columns only, never an identity
+    * column (its values are engine-owned), never a generated column nor
+    * one it derives from — assignments evaluate against the rows before
+    * the change, so an inline recompute would read stale sources;
+    * rewrite via createOrReplace to change a derivation. `op` names the
+    * operation in the refusal.
     */
-  private[sources] def checkUpdateAssignments(
+  private[sources] def checkAssignments(
       layer: String,
       table: String,
-      assignments: Map[String, Column],
+      op: String,
+      assigned: Iterable[String],
       columns: Seq[String]
   ): Unit = {
+    val colsLower = columns.map(_.toLowerCase).toSet
+    assigned.foreach(c =>
+      require(colsLower.contains(c.toLowerCase), s"$op assigns unknown column $c"))
+    val keys = assigned.map(_.toLowerCase).toSet
     identityColumns(layer, table).foreach { case (c, _, _) =>
-      require(!assignments.keys.exists(_.equalsIgnoreCase(c)),
-        s"cannot UPDATE identity column $c (GENERATED ALWAYS AS IDENTITY)")
+      require(!keys.contains(c.toLowerCase),
+        s"$op cannot assign identity column $c (GENERATED ALWAYS AS IDENTITY)")
     }
-    val keys = assignments.keySet.map(_.toLowerCase)
     generatedColumns(layer, table).foreach { case (c, e) =>
       require(!keys.contains(c.toLowerCase),
-        s"cannot UPDATE generated column $c (GENERATED ALWAYS AS $e)")
+        s"$op cannot assign generated column $c (GENERATED ALWAYS AS $e)")
       val overlap = exprDeps(e).intersect(keys)
       require(overlap.isEmpty,
-        s"UPDATE assigns ${overlap.mkString(", ")}, which generated column " +
+        s"$op assigns ${overlap.mkString(", ")}, which generated column " +
           s"$c derives from — rewrite via createOrReplace to keep $c consistent")
     }
-    assignments.keys.foreach(c =>
-      require(columns.contains(c), s"UPDATE assigns unknown column $c"))
   }
 
   /** CREATE OR REPLACE TABLE AS SELECT (reference bronze_arxiv.py:102).
@@ -191,24 +195,13 @@ private[sources] trait WarehouseDml { self: Warehouse =>
       df0: DataFrame,
       partitionCols: Seq[String] = Seq.empty
   ): Long = {
-    repairCrashedSwap(layer, table)
     val gen = applyGenerated(layer, table, df0, "CREATE OR REPLACE")
     // a REPLACE may legitimately carry the identity column (it is a
     // table redefinition — the engine's own DDL rewrites route here)
     val (df, idHighs) = applyIdentity(layer, table, gen, allowCarry = true)
     commitIdentity(layer, table, idHighs)
     enforceConstraints(layer, table, df, "CREATE OR REPLACE")
-    val staging = new Path(tablePath(layer, table) + ".__staging")
-    fs.delete(staging, true)
-    // row count as an observe() metric from the write job itself — a
-    // staging re-read would scan every written byte a second time,
-    // doubling CTAS read I/O at any scale (same one-pass contract as
-    // [[append]])
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(staging.toString)
-    val rows = obs.get("n").asInstanceOf[Long]
-    retireAndSwap(layer, table, staging)
+    val rows = replaceTable(layer, table)(staging => writeCounted(df, staging.toString, partitionCols))
     logOp(layer, table, "CREATE OR REPLACE", inserted = rows, updated = 0, outputRows = rows)
     primeSchemaCache(layer, table, df.schema) // a partitioned table keeps inference
     rows
@@ -294,7 +287,7 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     repairCrashedSwap(layer, table)
     materializeDv(layer, table) // rewrite never runs against live tombstones
     val df  = mergedRead(layer, table)
-    checkUpdateAssignments(layer, table, assignments, df.columns.toSeq)
+    checkAssignments(layer, table, "UPDATE", assignments.keys, df.columns.toSeq)
     val hit = coalesce(predicate, lit(false))
     // post-images of the matched slice — the only new row images an
     // UPDATE introduces; checked before anything stages
@@ -302,7 +295,7 @@ private[sources] trait WarehouseDml { self: Warehouse =>
       enforceConstraints(layer, table, applyAssignments(df.filter(hit), assignments), "UPDATE")
     val pcols = partitionColumns(layer, table)
     require(
-      !assignments.keys.exists(pcols.contains),
+      !assignments.keys.exists(k => pcols.exists(_.equalsIgnoreCase(k))),
       s"partition-scoped UPDATE cannot assign partition columns (${pcols.mkString(",")}): " +
         "rows would move between partitions — use upsert (MERGE) instead")
     val (files, parts) = hitScope(df, hit, pcols)
@@ -325,46 +318,6 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     primeSchemaCache(layer, table, df.schema)
     primeFeedSchemaCache(layer, table, df.schema)
     updated
-  }
-
-  /** Shared validation for the full-clause MERGE paths: explicit SET /
-    * INSERT assignments must name real columns, never identity columns
-    * (GENERATED ALWAYS AS IDENTITY values are engine-owned), never
-    * generated columns nor their derivation sources (the same
-    * stale-read rule [[update]] enforces — assignments evaluate
-    * against pre-merge rows, so an inline recompute would read stale
-    * sources).
-    */
-  private[sources] def validateClauseAssignments(
-      layer: String,
-      table: String,
-      columns: Seq[String],
-      matched: Seq[graft.operators.MergeClause.Matched],
-      notMatched: Seq[graft.operators.MergeClause.NotMatched],
-      bySource: Seq[graft.operators.MergeClause.BySource]
-  ): Unit = {
-    import graft.operators.MergeClause._
-    val assigned: Set[String] = (
-      matched.collect { case UpdateMatched(_, Some(set)) => set.keys } ++
-        notMatched.collect { case InsertNotMatched(_, Some(vs)) => vs.keys } ++
-        bySource.collect { case UpdateBySource(_, set) => set.keys }
-    ).flatten.toSet
-    val colsLower = columns.map(_.toLowerCase).toSet
-    assigned.foreach(c =>
-      require(colsLower.contains(c.toLowerCase), s"MERGE assigns unknown column $c"))
-    val assignedLower = assigned.map(_.toLowerCase)
-    identityColumns(layer, table).foreach { case (c, _, _) =>
-      require(!assignedLower.contains(c.toLowerCase),
-        s"cannot MERGE-assign identity column $c (GENERATED ALWAYS AS IDENTITY)")
-    }
-    generatedColumns(layer, table).foreach { case (c, e) =>
-      require(!assignedLower.contains(c.toLowerCase),
-        s"cannot MERGE-assign generated column $c (GENERATED ALWAYS AS $e)")
-      val overlap = exprDeps(e).intersect(assignedLower)
-      require(overlap.isEmpty,
-        s"MERGE assigns ${overlap.mkString(", ")}, which generated column " +
-          s"$c derives from — rewrite via createOrReplace to keep $c consistent")
-    }
   }
 
   // ---- MERGE: one front end, one copy-on-write body ----
@@ -469,7 +422,12 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     // columns are tolerated)
     val tgtSchema = mergedSchemaOf(layer, table).getOrElse(mergedRead(layer, table).schema)
     val unioned   = unionSchema(tgtSchema, src.schema)
-    validateClauseAssignments(layer, table, unioned.fieldNames.toSeq, matched, notMatched, bySource)
+    val assigned = (
+      matched.collect { case MergeClause.UpdateMatched(_, Some(set)) => set.keys } ++
+        notMatched.collect { case MergeClause.InsertNotMatched(_, Some(vs)) => vs.keys } ++
+        bySource.collect { case MergeClause.UpdateBySource(_, set) => set.keys }
+    ).flatten
+    checkAssignments(layer, table, "MERGE", assigned, unioned.fieldNames.toSeq)
     body(src, unioned)
   }
 
@@ -616,9 +574,8 @@ private[sources] trait WarehouseDml { self: Warehouse =>
         val rd = retireDirsFor(new Path(target), pcols, tgt0.schema, touchedAll)
         (rd, dataFilesUnder(new Path(target), rd).filterNot(p => matchedFiles.contains(p._1)))
       }
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val ver = nextVersion(s"$layer.$table")
+    val staging = freshStaging(target)
+    val ver     = nextVersion(s"$layer.$table")
     // footer-only count BEFORE the feed write: the feed-to-ledger commit
     // window must stay minimal — a streaming feed consumer waits on the
     // commit (see WarehouseStreams.mvRefreshSink)
@@ -672,16 +629,10 @@ private[sources] trait WarehouseDml { self: Warehouse =>
       table: String,
       ver: Long,
       rows: DataFrame
-  ): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    rows
-      .withColumn("_commit_version", lit(ver))
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(tablePath(layer, table) + ".__changes")
-    obs.get("n").asInstanceOf[Long]
-  }
+  ): Long =
+    writeCounted(
+      rows.withColumn("_commit_version", lit(ver)).withColumn("_commit_part", lit(f"$ver%010d")),
+      tablePath(layer, table) + ".__changes", Seq("_commit_part"), SaveMode.Append)
 
   /** INSERT INTO ... SELECT (reference silver_google_scholar.py:148).
     * The appended-row count is an `observe` metric collected from the
@@ -705,15 +656,10 @@ private[sources] trait WarehouseDml { self: Warehouse =>
     val aligned =
       if (!tableExists(layer, table)) df
       else alignTo(df, unionSchema(rawTable(layer, table).schema, df.schema))
-    val obs = org.apache.spark.sql.Observation()
     // a partitioned table keeps its layout: root-level data files in a
     // hive tree are a mixed layout Spark's discovery refuses to read
-    val pcols  = partitionColumns(layer, table)
-    val writer = aligned.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append)
-    (if (pcols.nonEmpty) writer.partitionBy(pcols: _*) else writer)
-      .parquet(tablePath(layer, table))
-    val n = obs.get("n").asInstanceOf[Long]
+    val n = writeCounted(aligned, tablePath(layer, table), partitionColumns(layer, table),
+      SaveMode.Append)
     logOp(layer, table, "APPEND", inserted = n, updated = 0, outputRows = n)
     primeSchemaCache(layer, table, aligned.schema)
     n

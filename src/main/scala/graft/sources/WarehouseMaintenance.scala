@@ -10,8 +10,11 @@ import org.apache.spark.sql.types.StructType
   * auto, partition-scoped), Z-ordering with cluster health, CHECK /
   * NOT NULL constraints, table properties, generated columns, and the
   * file-skipping sidecars (min/max stats, bloom filters) with their
-  * pruned scans. Split from Warehouse.scala for reviewability — no
-  * behavior change.
+  * pruned scans. COMPACT and ZORDER share one whole-table body
+  * ([[rewriteTable]], over [[Warehouse.replaceTable]]); partition-
+  * scoped and auto-compaction share one body ([[compactDirs]]) over
+  * the file-granular rewrite DELETE and UPDATE use
+  * ([[WarehouseDml.rewriteFiles]]).
   */
 private[sources] trait WarehouseMaintenance { self: Warehouse =>
 
@@ -29,133 +32,144 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
     withWriterLock(layer, table)(compactImpl(layer, table, targetRowsPerFile))
 
   private[sources] def compactImpl(layer: String, table: String, targetRowsPerFile: Long): Long = {
-    materializeDv(layer, table) // rewrite never runs against live tombstones
+    val filesBefore = rewriteTable(layer, table, "COMPACT", targetRowsPerFile)(_.repartition(_))._2
+    filesBefore - liveFileCount(layer, table)
+  }
+
+  /** Data files of the live table — a driver-side listing. */
+  private def liveFileCount(layer: String, table: String): Long =
+    allDataFiles(new Path(tablePath(layer, table)), partitionColumns(layer, table).length).length
+
+  /** The one body of COMPACT and ZORDER: the whole table rewritten in
+    * its live layout through [[replaceTable]], `shape`d into `nFiles`
+    * output files of about `targetRowsPerFile` rows. The row count
+    * comes from the footers of the files read (no tombstone is live
+    * after [[materializeDv]]) and the staged write must observe exactly
+    * that many rows. Ledger op `op`. Returns the row count and the
+    * number of files read.
+    */
+  private def rewriteTable(layer: String, table: String, op: String, targetRowsPerFile: Long)(
+      shape: (DataFrame, Int) => DataFrame): (Long, Long) = {
     repairCrashedSwap(layer, table)
-    val target = tablePath(layer, table)
+    materializeDv(layer, table) // rewrite never runs against live tombstones
     // mergeSchema: an evolved table's older files lack the newer
-    // columns — a plain read takes one footer's schema and the compact
-    // rewrite would silently DROP the evolved columns' data
-    val before = mergedRead(layer, table)
-    val rows   = before.count()
-    val filesBefore = before.inputFiles.length.toLong
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile)
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val pcols = partitionColumns(layer, table) // preserve the live layout
-    val obs = org.apache.spark.sql.Observation()
-    val writer = before
-      .repartition(nFiles.toInt)
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    (if (pcols.nonEmpty) writer.partitionBy(pcols: _*) else writer).parquet(staging.toString)
-    val back = obs.get("n").asInstanceOf[Long]
-    require(back == rows, s"compaction changed row count: $rows -> $back")
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "COMPACT", inserted = 0, updated = 0, outputRows = rows)
-    filesBefore - spark.read.parquet(target).inputFiles.length
+    // columns — a plain read takes one footer's schema and the rewrite
+    // would silently DROP the evolved columns' data
+    val df     = mergedRead(layer, table)
+    val files  = df.inputFiles.map(normDataFile).toSeq
+    val rows   = footerRowCount(files, Some(tablePath(layer, table)))
+    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+    val pcols  = partitionColumns(layer, table) // preserve the live layout
+    replaceTable(layer, table) { staging =>
+      val back = writeCounted(shape(df, nFiles), staging.toString, pcols)
+      require(back == rows, s"$op changed row count: $rows -> $back")
+      back
+    }
+    logOp(layer, table, op, inserted = 0, updated = 0, outputRows = rows)
+    (rows, files.length.toLong)
   }
 
   /** Auto-compaction — Delta's `autoOptimize.autoCompact` policy as an
     * explicit call a pipeline runs after its write wave: compact
     * exactly the partitions whose data-file count exceeds
     * `maxFilesPerPartition` (driver-side listing finds offenders — no
-    * data I/O; [[compactWhere]] rewrites only them), or the whole
+    * data I/O; [[compactDirs]] rewrites only them), or the whole
     * table when unpartitioned and fragmented past the bound. Appends
     * fragment partitions one small file per writer task per day; this
     * is the bounded-cost cleanup that keeps scan file counts O(data),
     * not O(commits), at 100 TB. Returns the number of partitions
     * compacted (1 for an unpartitioned whole-table pass, 0 for a
-    * no-op).
+    * no-op, which commits nothing).
     */
   def autoCompact(layer: String, table: String, maxFilesPerPartition: Int = 8): Long =
     withWriterLock(layer, table) {
       require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
       val pcols = partitionColumns(layer, table)
       if (pcols.isEmpty) {
-        val files = rawTable(layer, table).inputFiles.length
-        if (files > maxFilesPerPartition) { compactImpl(layer, table, 1_000_000L); 1L }
-        else 0L
+        if (liveFileCount(layer, table) > maxFilesPerPartition) {
+          compactImpl(layer, table, 1_000_000L); 1L
+        } else 0L
       } else {
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         val target = new Path(tablePath(layer, table))
-        val ptypes = {
-          val schema = rawTable(layer, table).schema
-          pcols.map(c => schema(c).dataType)
-        }
         val offenders = leafPartitionDirs(target, pcols.length)
           .filter(rel => dataFilesUnder(target, Seq(rel)).lengthCompare(maxFilesPerPartition) > 0)
-        if (offenders.isEmpty) 0L
-        else {
-          val tuples: Seq[Seq[String]] = offenders.map { rel =>
-            rel.split("/").toSeq.zip(ptypes).map { case (seg, t) =>
-              val raw = ExternalCatalogUtils.unescapePathName(seg.split("=", 2)(1))
-              if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-              else normalizePartitionValue(raw, t)
-            }
-          }
-          compactWhereImpl(layer, table, partitionPredicate(tuples, pcols))
-          offenders.length.toLong
-        }
+        // listed again inside: the tombstone barrier may rewrite files
+        if (offenders.nonEmpty)
+          compactDirs(layer, table, pcols)(_ => dataFilesUnder(target, offenders).map(_._1))
+        offenders.length.toLong
       }
     }
 
   /** Partition-scoped compaction — Delta's `OPTIMIZE t WHERE
     * <partition predicate>`: only the partitions the predicate selects
-    * rewrite (one file per touched directory via a hash repartition on
-    * the partition columns); everything else is untouched on disk. The
-    * predicate must reference partition columns only — at 100 TB you
-    * compact the recent ingest partitions after a merge wave, never
-    * the whole table, and this is the primitive that keeps OPTIMIZE
-    * O(churn) instead of O(table). Same staged partition swap (and the
-    * same crash repair) as the partition-scoped DML family. Returns
-    * the net file-count reduction.
+    * rewrite (one file per touched directory); everything else is
+    * untouched on disk. The predicate must reference partition columns
+    * only — at 100 TB you compact the recent ingest partitions after a
+    * merge wave, never the whole table, and this is the primitive that
+    * keeps OPTIMIZE O(churn) instead of O(table). Same staged partition
+    * swap (and the same crash repair) as the partition-scoped DML
+    * family. Returns the net file-count reduction.
     */
   def compactWhere(layer: String, table: String, predicate: Column): Long =
     withWriterLock(layer, table)(compactWhereImpl(layer, table, predicate))
 
   private[sources] def compactWhereImpl(layer: String, table: String, predicate: Column): Long = {
-    materializeDv(layer, table)
-    repairCrashedSwap(layer, table)
     val pcols = partitionColumns(layer, table)
     require(pcols.nonEmpty, "OPTIMIZE ... WHERE needs a hive-partitioned table")
-    val target = tablePath(layer, table)
-    val df     = mergedRead(layer, table)
-    // partition-columns-only enforcement: inspect the ANALYZED filter's
-    // references (the analyzer's resolve-missing-references rule would
-    // silently satisfy a data-column predicate through the projection —
-    // this must refuse, never promote to a whole-table rewrite)
-    val hit = df.filter(predicate)
-    val refs: Set[String] = hit.queryExecution.analyzed.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.references.map(_.name.toLowerCase).toSet
-    }.flatten.toSet
-    require(refs.subsetOf(pcols.map(_.toLowerCase).toSet),
-      s"OPTIMIZE ... WHERE must reference partition columns only (${pcols.mkString(",")}); " +
-        s"got: ${refs.mkString(",")}")
-    val touched = touchedPartitions(hit, pcols)
-    if (touched.isEmpty) {
+    compactDirs(layer, table, pcols) { df =>
+      import org.apache.spark.sql.catalyst.plans.logical.Filter
+      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+      // partition-columns-only enforcement: inspect the ANALYZED
+      // filter's references (the analyzer's resolve-missing-references
+      // rule would silently satisfy a data-column predicate through the
+      // projection — this must refuse, never promote to a whole-table
+      // rewrite)
+      val hit   = df.filter(predicate).queryExecution.analyzed
+      val conds = hit.collect { case f: Filter => f.condition }
+      val refs  = conds.flatMap(_.references.map(_.name.toLowerCase)).toSet
+      require(refs.subsetOf(pcols.map(_.toLowerCase).toSet),
+        s"OPTIMIZE ... WHERE must reference partition columns only (${pcols.mkString(",")}); " +
+          s"got: ${refs.mkString(",")}")
+      // Spark's own partition pruning, driver-side and jobless: the
+      // scan's file index lists the selected directories only (a
+      // path-based read prunes at physical planning, so `inputFiles`
+      // of the filtered frame still names every file)
+      hit.collectFirst { case l: LogicalRelation => l.relation }.toSeq.flatMap {
+        case r: HadoopFsRelation =>
+          r.location.listFiles(conds, Nil).flatMap(_.files.map(_.getPath.toString))
+      }
+    }
+  }
+
+  /** The one partition-scoped compaction body: after crash repair and
+    * the tombstone barrier, `select` picks data files off the table's
+    * merged read, and the directories holding them rewrite through
+    * [[rewriteFiles]] with the identity rewrite — every file of each
+    * directory is a touched file, so each directory stages as one file
+    * (the rewrite's clustering). The staged rows must number the
+    * files' footer row count. No file selected is a no-op `COMPACT`
+    * commit. Returns the net file-count reduction.
+    */
+  private def compactDirs(layer: String, table: String, pcols: Seq[String])(
+      select: DataFrame => Seq[String]): Long = {
+    repairCrashedSwap(layer, table)
+    materializeDv(layer, table) // rewrite never runs against live tombstones
+    val df    = mergedRead(layer, table)
+    val files = select(df)
+    if (files.isEmpty) {
       logOp(layer, table, "COMPACT", inserted = 0, updated = 0, outputRows = 0)
       return 0L
     }
-    val slicePred   = partitionPredicate(touched, pcols)
-    val filesBefore = df.filter(slicePred).inputFiles.length.toLong
-    val slice       = df.filter(slicePred)
-    val staging     = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val obs  = org.apache.spark.sql.Observation()
-    val rows = slice.count()
-    slice
-      .repartition(touched.length, pcols.map(col): _*)
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(staging.toString)
-    val back = obs.get("n").asInstanceOf[Long]
-    require(back == rows, s"partition-scoped compaction changed row count: $rows -> $back")
-    val retireDirs = retireDirsFor(new Path(target), pcols, df.schema, touched)
-    swapPartitions(layer, table, staging, retireDirs, pcols.length)
-    logOp(layer, table, "COMPACT", inserted = 0, updated = 0, outputRows = rows)
-    filesBefore - spark.read.parquet(target).filter(slicePred).inputFiles.length
+    val target = new Path(tablePath(layer, table))
+    val parts  = files.map(partitionTupleOf(_, pcols, df.schema)).distinct
+    val rows   = footerRowCount(files, Some(target.toString))
+    val (_, outputRows) = rewriteFiles(layer, table, df, pcols, files.toSet, parts, identity) {
+      (_, back) =>
+        require(back == rows, s"partition-scoped compaction changed row count: $rows -> $back")
+    }
+    logOp(layer, table, "COMPACT", inserted = 0, updated = 0, outputRows = outputRows)
+    files.length - dataFilesUnder(target, retireDirsFor(target, pcols, df.schema, parts)).length
   }
-
 
   /** Multi-dimensional clustering (Delta `OPTIMIZE ... ZORDER BY`
     * replacement): rewrite the table ordered along a Z-curve over
@@ -235,30 +249,13 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
       targetRowsPerFile: Long,
       bits: Int
   ): Long = {
-    repairCrashedSwap(layer, table)
-    materializeDv(layer, table) // rewrite never runs against live tombstones
     require(cols.nonEmpty && cols.size <= 4, "zorder supports 1-4 columns")
-    val target = tablePath(layer, table)
-    val df     = mergedRead(layer, table)
-    val rows   = df.count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val z      = zExpr(df, cols, bits, zStats(df, cols))
-    val staging = new Path(target + ".__staging")
-    fs.delete(staging, true)
-    val pcols = partitionColumns(layer, table) // preserve the live layout
-    val obs = org.apache.spark.sql.Observation()
-    val writer = df.withColumn("__z", z)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    (if (pcols.nonEmpty) writer.partitionBy(pcols: _*) else writer).parquet(staging.toString)
-    val back = obs.get("n").asInstanceOf[Long]
-    require(back == rows, s"zorder changed row count: $rows -> $back")
-    retireAndSwap(layer, table, staging)
-    logOp(layer, table, "ZORDER", inserted = 0, updated = 0, outputRows = rows)
-    rows
+    rewriteTable(layer, table, "ZORDER", targetRowsPerFile) { (df, nFiles) =>
+      df.withColumn("__z", zExpr(df, cols, bits, zStats(df, cols)))
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+    }._1
   }
 
   /** Liquid-clustering-shaped incremental Z-order: re-cluster ONLY the
@@ -352,7 +349,7 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
     require(spanThreshold > 0 && spanThreshold <= 1, "spanThreshold must be in (0, 1]")
     if (partitionColumns(layer, table).nonEmpty) {
       zorderImpl(layer, table, cols, targetRowsPerFile, bits)
-      return spark.read.parquet(tablePath(layer, table)).inputFiles.length.toLong
+      return liveFileCount(layer, table)
     }
     val df      = mergedRead(layer, table)
     val numCols = cols.filter(zIsNumeric(df, _))
@@ -847,15 +844,11 @@ private[sources] trait WarehouseMaintenance { self: Warehouse =>
 
   /** Stage-swap a sidecar table into place; returns its row count. */
   private[sources] def writeSidecar(p: Path, rows: DataFrame): Long = {
-    val staging = new Path(p.toString + ".__staging")
-    fs.delete(staging, true)
-    val obs = org.apache.spark.sql.Observation()
-    rows.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val staging = freshStaging(p.toString)
+    val n       = writeCounted(rows, staging.toString)
     fs.delete(p, true)
-    if (!fs.rename(staging, p))
-      throw new java.io.IOException(s"rename $staging -> $p failed")
-    obs.get("n").asInstanceOf[Long]
+    renameOrFail(staging, p)
+    n
   }
 
   /** Incrementally refresh the stats sidecar: rows for files still

@@ -190,15 +190,11 @@ private[sources] trait WarehouseMor { self: Warehouse =>
     * partition. Returns the number of positions written, observed from
     * the write job.
     */
-  private def appendTombstones(layer: String, table: String, ver: Long, rows: DataFrame): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    rows.select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
-      .withColumn("_commit_part", lit(f"$ver%010d"))
-      .observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Append).partitionBy("_commit_part")
-      .parquet(dvPath(layer, table).toString)
-    obs.get("n").asInstanceOf[Long]
-  }
+  private def appendTombstones(layer: String, table: String, ver: Long, rows: DataFrame): Long =
+    writeCounted(
+      rows.select(col("__dv_f").as("file_name"), col("__dv_p").as("pos"))
+        .withColumn("_commit_part", lit(f"$ver%010d")),
+      dvPath(layer, table).toString, Seq("_commit_part"), SaveMode.Append)
 
   /** DV file key: the trailing `depth + 1` path segments of the file —
     * `pt=a/part-XXX.parquet` for one partition level, the bare
@@ -306,10 +302,7 @@ private[sources] trait WarehouseMor { self: Warehouse =>
       // branch, re-pricing count() from footer reads to a data scan
       if (raw.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
           schema.fields.map(f => (f.name, f.dataType)).toSeq) raw
-      else raw.select(schema.fields.toSeq.map { f =>
-        if (raw.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
+      else alignTo(raw, schema)
     }
     val cleanDf =
       if (clean.isEmpty) None else Some(readAligned(clean))
@@ -445,7 +438,7 @@ private[sources] trait WarehouseMor { self: Warehouse =>
   ): Long = {
     repairCrashedSwap(layer, table)
     val raw = mergedRead(layer, table)
-    checkUpdateAssignments(layer, table, assignments, raw.columns.toSeq)
+    checkAssignments(layer, table, "UPDATE", assignments.keys, raw.columns.toSeq)
     val (visible, _) = visibleWithPositions(layer, table, raw)
     val matched      = visible.filter(coalesce(predicate, lit(false)))
     if (matched.isEmpty) {
@@ -544,12 +537,8 @@ private[sources] trait WarehouseMor { self: Warehouse =>
   ): Upsert.MergeClauseMetrics = {
     val raw                      = mergedRead(layer, table)
     val (visible, tombstoneRows) = visibleWithPositions(layer, table, raw)
-    val tgtAligned = visible.select(
-      unioned.fields.toSeq.map { f =>
-        if (visible.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      } ++ Seq(col("__dv_f"), col("__dv_p")): _*)
-    val changesPlan = Upsert.planMorChangesClauses(tgtAligned, alignTo(src, unioned), keys,
+    val changesPlan = Upsert.planMorChangesClauses(
+      alignTo(visible, unioned, keep = Seq("__dv_f", "__dv_p")), alignTo(src, unioned), keys,
       matched, notMatched, bySource, metaCols = Seq("__dv_f", "__dv_p"),
       insertOnlyCols = identityColumns(layer, table).map(_._1).toSet)
     // metrics FIRST, on the unpersisted plan (narrow, column-pruned):
@@ -642,8 +631,7 @@ private[sources] trait WarehouseMor { self: Warehouse =>
     staged.foreach { case (src, rel) =>
       val dst = new Path(target, rel)
       fs.mkdirs(dst.getParent)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"rename $src -> $dst failed")
+      renameOrFail(src, dst)
     }
     fs.delete(scratch, true)
     ()

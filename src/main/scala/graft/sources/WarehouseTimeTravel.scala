@@ -243,8 +243,7 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
             val (s, d) = (new Path(src), new Path(dst))
             if (fs.exists(s)) { // absent ⇒ an earlier replay moved it
               fs.mkdirs(d.getParent)
-              if (!fs.rename(s, d))
-                throw new java.io.IOException(s"feed migration rename $s -> $d failed")
+              renameOrFail(s, d)
             }
           case Array("rm", p) => fs.delete(new Path(p), false); ()
           case _              => ()
@@ -719,17 +718,11 @@ private[sources] trait WarehouseTimeTravel { self: Warehouse =>
     withWriterLock(layer, table)(restoreImpl(layer, table, version))
 
   private[sources] def restoreImpl(layer: String, table: String, version: Long): Long = {
-    repairCrashedSwap(layer, table)
-    val snap    = tableAsOf(layer, table, version) // validates retention
-    val pcols   = partitionColumns(layer, table)   // preserve the live layout
-    val staging = new Path(tablePath(layer, table) + ".__restore_staging")
-    fs.delete(staging, true)
-    val obs = org.apache.spark.sql.Observation()
-    val writer = snap.observe(obs, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite)
-    (if (pcols.nonEmpty) writer.partitionBy(pcols: _*) else writer).parquet(staging.toString)
-    val rows = obs.get("n").asInstanceOf[Long]
-    retireAndSwap(layer, table, staging)
+    val rows = replaceTable(layer, table) { staging =>
+      // tableAsOf validates retention; the live layout is preserved
+      writeCounted(tableAsOf(layer, table, version), staging.toString,
+        partitionColumns(layer, table))
+    }
     logOp(layer, table, "RESTORE", inserted = rows, updated = 0, outputRows = rows)
     rows
   }
